@@ -701,18 +701,9 @@ def _write_position_deletes(
 
     cur = table.schema
     arms = []
-    _by_id = {s.snapshot_id: s for s in table.all_snapshots()}
-    datas = [
-        x
-        for s in table.snapshots
-        if not s.is_row_delete
-        and s.sequence_number < pred_snap.sequence_number
-        # manifest-rewrite entries scan as their sources (no dir of
-        # their own); sources keep smaller sequence numbers, so the
-        # earlier-than-the-delete filter above stays correct
-        for x in table._expand_manifest_sources(s, _by_id)
-    ]
-    for s in datas:
+    for s in table._live_state(table.snapshots)[0]:
+        if s.sequence_number >= pred_snap.sequence_number:
+            continue  # the mask covers EARLIER data only
         df = spark.read.parquet(str(table.location / s.data_dir))
         df = df.drop(
             *[c for c in df.columns if c.startswith(PARTITION_COL_PREFIX)]
@@ -952,19 +943,16 @@ def export_to_iceberg(
     # snapshot's OWN partition spec (per-manifest specs — how Iceberg
     # represents spec evolution); v2 delete snapshots a DELETE manifest
     # (content=1) under an unpartitioned spec (global scope).
-    live: list[Snapshot] = list(table.snapshots)
     # manifest-rewrite snapshots (rewrite_manifests) expand into their
     # SOURCE snapshots: each source exports its own manifest under its
     # own spec/schema, so the exported document is IDENTICAL to the
     # pre-rewrite export (the rewrite is engine-side metadata hygiene;
-    # external readers see the same files, ids, and lineage)
-    if any(s.source_snapshots for s in live):
-        _by_id = {s.snapshot_id: s for s in table.all_snapshots()}
-        live = [
-            x
-            for s in live
-            for x in table._expand_manifest_sources(s, _by_id)
-        ]
+    # external readers see the same files, ids, and lineage). The
+    # chain is in sequence-number order — the live list's own order,
+    # since sources precede their fold — as the spec requires of
+    # parent links.
+    datas, deletes = table._live_state(table.snapshots)
+    live = sorted(datas + deletes, key=lambda s: s.sequence_number)
 
     # delete manifests scope globally -> they need an unpartitioned
     # spec to reference; synthesize one if no spec version is empty
@@ -1024,9 +1012,7 @@ def export_to_iceberg(
     lineage_maps: dict[str, dict[str, int]] = {}
     lineage_ok = fv == 3
     if lineage_ok:
-        for snap in live:
-            if snap.is_row_delete:
-                continue
+        for snap in datas:
             files = snap.files
             if files is None or any(
                 f.get("first_row_id") is None for f in files

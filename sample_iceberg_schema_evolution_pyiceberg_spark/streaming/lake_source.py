@@ -178,7 +178,7 @@ class _LakeLogPlanner:
         data files, in their original dirs), which makes them valid
         base loads for fresh streams."""
         if not s.data_dir:
-            if getattr(s, "source_snapshots", None) and s.files:
+            if s.source_snapshots and s.files:
                 return sorted(
                     os.path.join(self.location, f["path"])
                     for f in s.files
@@ -250,7 +250,7 @@ class _LakeLogPlanner:
             if (seq, float("inf")) <= start_pos:
                 continue
             files = self._files_of(s)
-            if getattr(s, "source_snapshots", None) and base != seq:
+            if s.source_snapshots and base != seq:
                 if fresh:
                     # grant-less speculation: stop BEFORE the fold —
                     # the next batch's floor carries the real grant
@@ -328,7 +328,7 @@ class _LakeLogPlanner:
             if (
                 s0 is not None
                 and s0.operation != "append"
-                and not getattr(s0, "source_snapshots", None)
+                and not s0.source_snapshots
             ):
                 granted.add(s0.sequence_number)
         # manifest rewrites (rewrite_manifests) crossed mid-stream are
@@ -340,7 +340,7 @@ class _LakeLogPlanner:
             s
             for s in rng
             if not (
-                getattr(s, "source_snapshots", None)
+                s.source_snapshots
                 and s.sequence_number not in granted
             )
         ]

@@ -78,6 +78,7 @@ import json
 import re
 import time
 import uuid
+from collections.abc import Iterator
 from dataclasses import dataclass
 from pathlib import Path
 from typing import Any
@@ -185,6 +186,18 @@ class Snapshot:
         lineage segment. Predicate/equality deletes are non-append but
         NOT rewrites — they compose within a segment."""
         return self.operation != "append" and not self.is_row_delete
+
+    @property
+    def dirs(self) -> list[str]:
+        """The table-relative directories this entry owns — its data
+        dir, equality-key dir and position-delete dir, whichever are
+        non-empty (a predicate delete or a manifest rewrite owns none).
+        THE list expiration, rollback and orphan removal delete by."""
+        return [
+            d
+            for d in (self.data_dir, self.delete_keys_dir, self.delete_pos_dir)
+            if d
+        ]
 
     def to_json(self) -> dict[str, Any]:
         return self.__dict__.copy()
@@ -1522,35 +1535,63 @@ class LakeTable:
     def snapshots(self) -> list[Snapshot]:
         return [Snapshot.from_json(s) for s in self.meta["snapshots"]]
 
-    def _segment_ending_at(self, snapshot_id: str) -> list[Snapshot]:
-        """The lineage segment whose last element is the target —
-        rewrites reset the fold, predicate deletes compose inside it.
-        THE state-reconstruction walk time travel and rollback share
-        (expire_snapshots runs the same fold over every retained
-        snapshot). Raises on unknown ids; expired-target policy is the
-        caller's."""
+    def _segments(self) -> "Iterator[tuple[Snapshot, list[Snapshot]]]":
+        """Each snapshot of ``all_snapshots()`` with its lineage
+        segment (the snapshot is the segment's last element) — rewrites
+        reset the fold, predicate deletes compose inside it. THE
+        state-reconstruction walk time travel, rollback and
+        expire_snapshots share."""
         seg: list[Snapshot] = []
         for s in self.all_snapshots():
             seg = [s] if s.is_rewrite else seg + [s]
+            yield s, seg
+
+    def _segment_ending_at(self, snapshot_id: str) -> list[Snapshot]:
+        """The lineage segment whose last element is the target. Raises
+        on unknown ids; expired-target policy is the caller's."""
+        for s, seg in self._segments():
             if s.snapshot_id == snapshot_id:
                 return seg
         raise TableFormatError(
             f"unknown snapshot {snapshot_id!r} for {self.identifier}"
         )
 
+    def _live_state(
+        self, snaps: "list[Snapshot]"
+    ) -> "tuple[list[Snapshot], list[Snapshot]]":
+        """Split a live list (or a lineage segment) into ``(datas,
+        deletes)``: the data entries a scan maps over, in order, with
+        manifest-rewrite folds expanded to their SOURCE snapshots, and
+        the merge-on-read delete entries whose masks apply to them.
+        The sources keep their ORIGINAL (smaller) sequence numbers, so
+        a mask committed after the fold still applies to them and row
+        lineage resolves to them; hive discovery, per-version schema
+        alignment, spec pruning and bucket adoption keep their
+        per-source behavior. ONE walk for the scan, the lineage read,
+        the lineage carry decision and the export, so none of them can
+        diverge."""
+        deletes = [s for s in snaps if s.is_row_delete]
+        datas = [s for s in snaps if not s.is_row_delete]
+        if any(s.source_snapshots for s in datas):
+            by_id = {x.snapshot_id: x for x in self.all_snapshots()}
+            datas = [
+                x
+                for s in datas
+                for x in self._expand_manifest_sources(s, by_id)
+                if not x.source_snapshots
+            ]
+        return datas, deletes
+
     def _expand_manifest_sources(
         self, s: Snapshot, by_id: "dict[str, Snapshot]"
-    ) -> list[Snapshot]:
-        """A manifest-rewrite snapshot (``rewrite_manifests``) scans as
-        its SOURCE snapshots — the data never moved, so every per-arm
-        concern (schema version, partition spec, hive-dir discovery,
-        bucket-layout adoption) keeps using the original entries.
-        Recursive: a source may itself be an earlier manifest rewrite.
-        Plain snapshots expand to themselves."""
-        if not s.source_snapshots:
-            return [s]
-        out: list[Snapshot] = []
-        for sid in s.source_snapshots:
+    ) -> "Iterator[Snapshot]":
+        """``s`` and, for a manifest-rewrite snapshot
+        (``rewrite_manifests``), every snapshot it folds, depth first
+        in source order. Recursive: a source may itself be an earlier
+        manifest rewrite. The leaves are the entries a scan maps over;
+        expiration keeps the whole closure."""
+        yield s
+        for sid in s.source_snapshots or []:
             src = by_id.get(sid)
             if src is None:
                 raise TableFormatError(
@@ -1559,8 +1600,7 @@ class LakeTable:
                     "metadata corrupted (sources must outlive the "
                     "rewrite; expire_snapshots keeps them)"
                 )
-            out.extend(self._expand_manifest_sources(src, by_id))
-        return out
+            yield from self._expand_manifest_sources(src, by_id)
 
     def all_snapshots(self) -> list[Snapshot]:
         """History + live snapshots in canonical commit order —
@@ -3659,6 +3699,21 @@ class LakeTable:
         and RETAIN their snapshot against expire_snapshots."""
         return dict(self.meta.get("tags") or {})
 
+    def _ref_pins(self) -> dict[str, list[str]]:
+        """Snapshot id -> the refs that pin it: its tags and every
+        staging branch whose list carries it. Iceberg refs keep their
+        snapshots until the ref is dropped, so expire_snapshots retains
+        these and rollback_to_snapshot refuses to remove them."""
+        pins: dict[str, list[str]] = {}
+        for name, sid in sorted((self.meta.get("tags") or {}).items()):
+            pins.setdefault(sid, []).append(f"tag {name!r}")
+        for name in self.branches:
+            for s in self._branch(name)["snapshots"]:
+                pins.setdefault(s["snapshot_id"], []).append(
+                    f"branch {name!r}"
+                )
+        return pins
+
     def resolve_ref(self, ref: str) -> str:
         """A tag name resolves to its snapshot id; anything else
         passes through unchanged (snapshot ids win if a tag shadows
@@ -3775,16 +3830,7 @@ class LakeTable:
         hist.sort(key=lambda s: (s.sequence_number, s.timestamp_ms))
         alive = [s for s in hist if not s.expired]
         keep_tail = alive[len(alive) - retain_last:] if retain_last else []
-        keep_ids = {s.snapshot_id for s in keep_tail}
-        # tagged snapshots are ref-retained (Iceberg: refs pin their
-        # snapshots against expiration until the ref is dropped);
-        # branch-referenced snapshots likewise
-        keep_ids |= set((self.meta.get("tags") or {}).values())
-        keep_ids |= {
-            s["snapshot_id"]
-            for b in (self.meta.get("branches") or {}).values()
-            for s in b["snapshots"]
-        }
+        keep_ids = {s.snapshot_id for s in keep_tail} | set(self._ref_pins())
         expired_now = [
             s
             for s in alive
@@ -3804,27 +3850,21 @@ class LakeTable:
         # lineage stay (a dropped interior predicate delete would
         # RESURRECT its deleted rows in later reads), fully-unneeded
         # ones are dropped outright and their dirs deleted.
-        chain = self.all_snapshots()
-        by_id = {s.snapshot_id: s for s in chain}
+        by_id = {s.snapshot_id: s for s in self.all_snapshots()}
         needed_ids: set[str] = set()
-        seg: list[Snapshot] = []
-        for s in chain:
-            # rewrites (overwrite/compact/copy-on-write DML) start a
-            # fresh lineage segment; predicate deletes compose inside
-            # it (same fold as _segment_ending_at)
-            seg = [s] if s.is_rewrite else seg + [s]
-            if not s.expired:
-                for x in seg:
-                    needed_ids.add(x.snapshot_id)
-                    # a manifest rewrite (rewrite_manifests) DEPENDS on
-                    # its source snapshots' dirs — unlike a data
-                    # rewrite, it never copied the bytes. Keep the
-                    # whole source closure or the dir delete below
-                    # destroys live data.
-                    needed_ids.update(
-                        y.snapshot_id
-                        for y in self._expand_manifest_sources(x, by_id)
-                    )
+        for s, seg in self._segments():
+            if s.expired:
+                continue
+            # a manifest rewrite (rewrite_manifests) DEPENDS on its
+            # source snapshots' dirs — unlike a data rewrite, it never
+            # copied the bytes. Keep the whole source closure, earlier
+            # folds included (a later fold resolves through their
+            # entries), or the dir delete below destroys live data.
+            needed_ids.update(
+                y.snapshot_id
+                for x in seg
+                for y in self._expand_manifest_sources(x, by_id)
+            )
         drop = [
             s
             for s in self.meta.get("snapshot_history", [])
@@ -3839,18 +3879,8 @@ class LakeTable:
         self._commit()  # metadata first: a crash leaves orphans, not
         # dangling references (remove_orphan_files reaps them)
         for s in drop:
-            if s["data_dir"]:  # predicate deletes carry no dir
-                self.data_io.delete_recursive(
-                    str(self.location / s["data_dir"])
-                )
-            if s.get("delete_keys_dir"):  # equality-delete key files
-                self.data_io.delete_recursive(
-                    str(self.location / s["delete_keys_dir"])
-                )
-            if s.get("delete_pos_dir"):  # position-delete files
-                self.data_io.delete_recursive(
-                    str(self.location / s["delete_pos_dir"])
-                )
+            for d in Snapshot.from_json(s).dirs:
+                self.data_io.delete_recursive(str(self.location / d))
         return sorted(expired_ids)
 
     def remove_orphan_files(self) -> list[str]:
@@ -3874,19 +3904,9 @@ class LakeTable:
                 for s in b["snapshots"]
             ]
         )
-        referenced = (
-            {s["data_dir"] for s in all_entries}
-            | {
-                s["delete_keys_dir"]
-                for s in all_entries
-                if s.get("delete_keys_dir")
-            }
-            | {
-                s["delete_pos_dir"]
-                for s in all_entries
-                if s.get("delete_pos_dir")
-            }
-        )
+        referenced = {
+            d for s in all_entries for d in Snapshot.from_json(s).dirs
+        }
         removed: list[str] = []
         data_root = self.location / "data"
         for child in self.data_io.list_subdirs(str(data_root)):
@@ -4088,7 +4108,9 @@ class LakeTable:
         kept-but-abandoned branch would need (Iceberg keeps displaced
         snapshots addressable via parent pointers until
         expire-snapshots; we document the divergence and fail loudly
-        on later reads of the removed ids). Metadata commits BEFORE
+        on later reads of the removed ids). A snapshot a tag or branch
+        still references is never removed: the call refuses, naming
+        the ref, before changing anything. Metadata commits BEFORE
         dir deletes — a crash leaves orphans for
         ``remove_orphan_files``, never dangling references.
 
@@ -4117,6 +4139,19 @@ class LakeTable:
         displaced = [
             s for s in self.all_snapshots() if s.sequence_number > target_seq
         ]
+        pins = self._ref_pins()
+        pinned = [
+            f"{s.snapshot_id} ({', '.join(pins[s.snapshot_id])})"
+            for s in displaced
+            if s.snapshot_id in pins
+        ]
+        if pinned:
+            raise TableFormatError(
+                f"cannot roll back to {snapshot_id!r}: it would remove "
+                f"snapshot(s) {'; '.join(pinned)} that a ref still "
+                "references — drop the tag/branch (or fast_forward the "
+                "branch) first"
+            )
         live_ids = {x.snapshot_id for x in seg}
         # restored segment becomes live; earlier intact segments stay
         # in history; the abandoned fork (> target) is dropped outright
@@ -4129,44 +4164,10 @@ class LakeTable:
         self.meta["snapshots"] = [x.to_json() for x in seg]
         self._commit()
         for s in displaced:
-            if s.data_dir:  # predicate-delete snapshots carry no dir
-                self.data_io.delete_recursive(
-                    str(self.location / s.data_dir)
-                )
-            if s.delete_keys_dir:  # equality-delete key files
-                self.data_io.delete_recursive(
-                    str(self.location / s.delete_keys_dir)
-                )
-            if s.delete_pos_dir:  # position-delete files
-                self.data_io.delete_recursive(
-                    str(self.location / s.delete_pos_dir)
-                )
+            for d in s.dirs:
+                self.data_io.delete_recursive(str(self.location / d))
 
     # -- metadata tables (Iceberg's db.tbl.snapshots / db.tbl.files) -------
-
-    def _lineage_datas(
-        self, snaps: "list[Snapshot] | None" = None
-    ) -> "list[Snapshot]":
-        """The data snapshots a lineage read maps over: row-delete
-        masks excluded, manifest-rewrite folds expanded to their
-        SOURCE snapshots (the fold is content-preserving metadata —
-        lineage must resolve to the sources' sequence numbers, r15
-        review). ONE walk shared by ``lineage_df`` and
-        ``_lineage_assignable`` so the carry decision and the serve
-        path can never diverge (r16 review)."""
-        datas = [
-            s
-            for s in (snaps if snaps is not None else self.snapshots)
-            if not s.is_row_delete
-        ]
-        if any(s.source_snapshots for s in datas):
-            by_id = {x.snapshot_id: x for x in self.all_snapshots()}
-            datas = [
-                x
-                for s in datas
-                for x in self._expand_manifest_sources(s, by_id)
-            ]
-        return datas
 
     def _lineage_shadowed(self) -> "set[str]":
         """Schema columns shadowing the v3 lineage names."""
@@ -4185,7 +4186,7 @@ class LakeTable:
         return all(
             s.files is not None
             and all(f.get("first_row_id") is not None for f in s.files)
-            for s in self._lineage_datas()
+            for s in self._live_state(self.snapshots)[0]
         )
 
     def lineage_df(
@@ -4247,7 +4248,7 @@ class LakeTable:
                 )
             as_of_snapshot = self.resolve_ref(as_of_snapshot)
             snaps = self._segment_ending_at(as_of_snapshot)
-        for snap in self._lineage_datas(snaps):
+        for snap in self._live_state(snaps)[0]:
             if snap.files is None:
                 raise TableFormatError(
                     f"snapshot {snap.snapshot_id} carries no file "
@@ -4560,6 +4561,64 @@ class LakeTable:
 
     # -- read path ---------------------------------------------------------
 
+    def _apply_delete(
+        self,
+        spark: SparkSession,
+        df: DataFrame,
+        d: Snapshot,
+        cur: T.StructType,
+        how: str,
+    ) -> DataFrame:
+        """Apply one merge-on-read delete entry to ``df`` (rows aligned
+        to the current schema ``cur``; position masks also need the
+        ``_pos_file``/``_pos_index`` address columns). ``how`` is
+        ``"left_anti"`` for a scan (drop the masked rows) or
+        ``"left_semi"`` for the changelog (keep exactly the masked
+        rows). A predicate filters; equality-key and position files
+        join, broadcast only while the on-disk size is under
+        _BROADCAST_KEYFILE_MAX_BYTES (one batch's matched
+        keys/positions — usually tiny); an explicit F.broadcast() hint
+        is never demoted by AQE, so an unbounded bulk-upsert key set
+        falls back to AQE's own strategy choice instead of a forced
+        broadcast."""
+        if d.delete_predicate is not None:
+            if how == "left_semi":
+                return df.filter(d.delete_predicate)
+            return df.filter(f"NOT ({d.delete_predicate})")
+        if d.delete_pos_dir:
+            mask = spark.read.parquet(str(self.location / d.delete_pos_dir))
+        else:
+            # align key types to the current schema (the key file was
+            # written pre-promotion)
+            mask = spark.read.parquet(
+                str(self.location / d.delete_keys_dir)
+            ).select(
+                *[
+                    F.col(c).cast(cur[c].dataType).alias(c)
+                    for c in d.delete_key_cols
+                ]
+            )
+        # commit-time manifest when present (metadata-priced);
+        # data-plane stat fallback for pre-manifest metadata
+        if d.files is not None:
+            nbytes = sum(f["size_bytes"] for f in d.files)
+        else:
+            nbytes = sum(
+                p.stat().st_size
+                for r in d.dirs
+                for p in (self.location / r).rglob("*.parquet")
+            )
+        if nbytes <= _BROADCAST_KEYFILE_MAX_BYTES:
+            mask = F.broadcast(mask)
+        if d.delete_pos_dir:
+            return df.join(
+                mask,
+                (df["_pos_file"] == mask["file_path"])
+                & (df["_pos_index"] == mask["pos"]),
+                how,
+            )
+        return df.join(mask, d.delete_key_cols, how)
+
     def to_df(
         self,
         spark: SparkSession,
@@ -4646,21 +4705,7 @@ class LakeTable:
         # snapshots carry no data; each masks the rows of EARLIER data
         # snapshots at scan time (filter for predicates, anti-join for
         # key and position files)
-        deletes = [s for s in snaps if s.is_row_delete]
-        datas = [s for s in snaps if not s.is_row_delete]
-        # manifest-rewrite snapshots (rewrite_manifests) scan as their
-        # SOURCE snapshots: the data never moved, so hive discovery,
-        # per-version schema alignment, spec pruning, and bucket
-        # adoption keep their original per-source behavior. Sources
-        # carry their ORIGINAL (smaller) sequence numbers, so delete
-        # masks committed after the rewrite still apply to them.
-        if any(s.source_snapshots for s in datas):
-            by_id = {x.snapshot_id: x for x in self.all_snapshots()}
-            datas = [
-                x
-                for s in datas
-                for x in self._expand_manifest_sources(s, by_id)
-            ]
+        datas, deletes = self._live_state(snaps)
         # position masks need each row's (file, ordinal) address
         need_pos = _with_positions or any(
             d.delete_pos_dir for d in deletes
@@ -4680,22 +4725,6 @@ class LakeTable:
         )
         if not datas:
             return spark.createDataFrame([], out_schema)
-
-        def _keyfile_bytes(d: Snapshot) -> int:
-            # commit-time manifest when present (metadata-priced);
-            # data-plane stat fallback for pre-manifest metadata
-            if d.files is not None:
-                return sum(f["size_bytes"] for f in d.files)
-            root = self.location / (d.delete_keys_dir or d.delete_pos_dir)
-            return sum(
-                p.stat().st_size for p in root.rglob("*.parquet")
-            )
-
-        keyfile_bytes = {
-            d.snapshot_id: _keyfile_bytes(d)
-            for d in deletes
-            if d.delete_keys_dir or d.delete_pos_dir
-        }
         groups: dict[tuple[int, int], list[Snapshot]] = {}
         for s in datas:
             groups.setdefault((s.schema_version, s.spec_id), []).append(s)
@@ -4884,54 +4913,11 @@ class LakeTable:
                 # snapshot's rows (post-alignment: predicates and key
                 # columns are named in current-schema terms); appends
                 # after a delete are untouched — standard SQL DELETE
-                # visibility. Equality-key and position masks anti-join
-                # their files, broadcast only while the on-disk size is
-                # under _BROADCAST_KEYFILE_MAX_BYTES (one batch's
-                # matched keys/positions — usually tiny); an explicit
-                # F.broadcast() hint is never demoted by AQE, so an
-                # unbounded bulk-upsert key set falls back to AQE's
-                # own strategy choice instead of a forced broadcast.
+                # visibility.
                 for d in deletes:
-                    if d.sequence_number <= s.sequence_number:
-                        continue
-                    if d.delete_predicate:
-                        df = df.filter(f"NOT ({d.delete_predicate})")
-                    elif d.delete_pos_dir:
-                        pos = spark.read.parquet(
-                            str(self.location / d.delete_pos_dir)
-                        )
-                        if (
-                            keyfile_bytes[d.snapshot_id]
-                            <= _BROADCAST_KEYFILE_MAX_BYTES
-                        ):
-                            pos = F.broadcast(pos)
-                        df = df.join(
-                            pos,
-                            (df["_pos_file"] == pos["file_path"])
-                            & (df["_pos_index"] == pos["pos"]),
-                            "left_anti",
-                        )
-                    else:
-                        keys = spark.read.parquet(
-                            str(self.location / d.delete_keys_dir)
-                        )
-                        # align key types to the current schema (the
-                        # key file was written pre-promotion)
-                        keys = keys.select(
-                            *[
-                                F.col(c).cast(cur[c].dataType).alias(c)
-                                for c in d.delete_key_cols
-                            ]
-                        )
-                        if (
-                            keyfile_bytes[d.snapshot_id]
-                            <= _BROADCAST_KEYFILE_MAX_BYTES
-                        ):
-                            keys = F.broadcast(keys)
-                        df = df.join(
-                            keys,
-                            d.delete_key_cols,
-                            "left_anti",
+                    if d.sequence_number > s.sequence_number:
+                        df = self._apply_delete(
+                            spark, df, d, cur, "left_anti"
                         )
                 if need_pos and not _with_positions:
                     df = df.drop("_pos_file", "_pos_index")
@@ -5329,43 +5315,18 @@ class LakeTable:
                     _tag(_align_df(df, cur), ordinal, s.snapshot_id,
                          "insert")
                 )
-            elif s.delete_predicate is not None:
-                deleted = _pre_state(i).filter(
-                    F.expr(s.delete_predicate)
-                )
-                parts.append(
-                    _tag(deleted, ordinal, s.snapshot_id, "delete")
-                )
-            elif s.delete_keys_dir is not None:
-                keys = spark.read.parquet(
-                    str(self.location / s.delete_keys_dir)
-                )
-                keys = keys.select(
-                    *[
-                        F.col(c).cast(cur[c].dataType).alias(c)
-                        for c in (s.delete_key_cols or [])
-                    ]
-                )
-                deleted = _pre_state(i).join(
-                    keys, s.delete_key_cols, "left_semi"
-                )
-                parts.append(
-                    _tag(deleted, ordinal, s.snapshot_id, "delete")
-                )
-            elif s.delete_pos_dir is not None:
-                # position delete: the pre-state rows at exactly the
-                # masked (file, ordinal) addresses — delta-priced,
+            elif s.is_row_delete:
+                # the pre-state rows the entry masks: semi-join instead
+                # of the scan's anti-join; position deletes need each
+                # row's (file, ordinal) address — delta-priced,
                 # replayable row-for-row
-                pos = spark.read.parquet(
-                    str(self.location / s.delete_pos_dir)
-                )
-                pre = _pre_state(i, with_positions=True)
-                deleted = pre.join(
-                    pos,
-                    (pre["_pos_file"] == pos["file_path"])
-                    & (pre["_pos_index"] == pos["pos"]),
+                by_pos = bool(s.delete_pos_dir)
+                deleted = self._apply_delete(
+                    spark, _pre_state(i, with_positions=by_pos), s, cur,
                     "left_semi",
-                ).drop("_pos_file", "_pos_index")
+                )
+                if by_pos:
+                    deleted = deleted.drop("_pos_file", "_pos_index")
                 parts.append(
                     _tag(deleted, ordinal, s.snapshot_id, "delete")
                 )

@@ -41,12 +41,25 @@ def wh(tmp_path):
     return str(tmp_path / "wh")
 
 
-def _appended_table(spark, wh, n_appends=5, rows_per=100):
+def _appended_table(spark, wh, n_appends=5, rows_per=100, fold_after=()):
+    """``fold_after``: append counts after which rewrite_manifests runs,
+    so a later fold takes an earlier one as a source."""
     cat = LakeCatalog(wh)
     t = cat.create_table("d", "m", _src(spark, 0, 1).schema)
     for i in range(n_appends):
         t.append(_src(spark, i * rows_per, (i + 1) * rows_per).coalesce(1))
+        if i + 1 in fold_after:
+            t.rewrite_manifests()
     return t
+
+
+# the final fold alone (1), or on top of an earlier fold (2): expire and
+# export must resolve the recursive expansion like to_df does
+_FOLDS = pytest.mark.parametrize("folds", [1, 2])
+
+
+def _earlier_folds(folds):
+    return (2,) if folds == 2 else ()
 
 
 def test_rewrite_manifests_folds_live_entries_invariantly(spark, wh):
@@ -134,8 +147,11 @@ def test_rewrite_manifests_guards_and_recursion(spark, wh):
     assert df.filter(F.col("k") < 10).count() == 0
 
 
-def test_rewrite_manifests_expire_keeps_source_dirs(spark, wh):
-    t = _appended_table(spark, wh, n_appends=4)
+@_FOLDS
+def test_rewrite_manifests_expire_keeps_source_dirs(spark, wh, folds):
+    t = _appended_table(
+        spark, wh, n_appends=4, fold_after=_earlier_folds(folds)
+    )
     t.rewrite_manifests()
     # expire everything expirable: the sources are tombstoned but
     # their dirs survive — the live fold still reads through them
@@ -149,6 +165,20 @@ def test_rewrite_manifests_expire_keeps_source_dirs(spark, wh):
     # ...and remove_orphan_files must not reap their dirs either
     assert t.remove_orphan_files() == []
     assert t.to_df(spark).count() == 400
+
+
+def test_rewrite_manifests_expire_keeps_intermediate_fold(spark, wh):
+    """Expiring ALL history under a two-level fold keeps the earlier
+    fold's entry: the live fold resolves through it to the real dirs."""
+    import time
+
+    t = _appended_table(spark, wh, n_appends=3, fold_after=(2,))
+    t.rewrite_manifests()
+    time.sleep(0.002)
+    expired = t.expire_snapshots(older_than_ms=int(time.time() * 1000))
+    assert len(expired) == 4  # three appends + the first fold
+    assert t.to_df(spark).count() == 300
+    assert t.remove_orphan_files() == []
 
 
 def test_rewrite_manifests_compact_and_rollback_compose(spark, wh):
@@ -186,13 +216,16 @@ def test_rewrite_manifests_ddl_call(spark, wh):
     assert "no-op" in r.message_list[-1]
 
 
-def test_rewrite_manifests_export_invariant(spark, wh):
+@_FOLDS
+def test_rewrite_manifests_export_invariant(spark, wh, folds):
     from sample_iceberg_schema_evolution_pyiceberg_spark.iceberg_export import (
         export_to_iceberg,
         read_iceberg_table,
     )
 
-    t = _appended_table(spark, wh, n_appends=3)
+    t = _appended_table(
+        spark, wh, n_appends=3, fold_after=_earlier_folds(folds)
+    )
     pre_doc = json.loads(
         sorted(export_to_iceberg(t).glob("v*.metadata.json"))[-1].read_text()
     )

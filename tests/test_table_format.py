@@ -289,6 +289,58 @@ def test_rollback_across_compaction(spark, catalog):
         table.rollback_to_snapshot(expired[0])
 
 
+def test_rollback_refuses_to_remove_ref_pinned_snapshots(spark, catalog):
+    """Tags and branches pin their snapshots (as against expiration):
+    a rollback that would remove one refuses, naming the ref, and
+    changes nothing."""
+    table, df = _mk(spark, catalog, "rb3")
+    a1 = table.append(df.filter("id < 50"))
+    a2 = table.append(df.filter("id >= 50"))
+    table.create_tag("keep", a2.snapshot_id)
+    table.create_branch("wap")
+    with pytest.raises(TableFormatError, match="tag 'keep'.*branch 'wap'"):
+        table.rollback_to_snapshot(a1.snapshot_id)
+    assert (table.location / a2.data_dir).exists()
+    assert [s.snapshot_id for s in table.snapshots] \
+        == [a1.snapshot_id, a2.snapshot_id]
+    assert table.to_df(spark, as_of_snapshot="keep").count() == 100
+    assert table.to_df(spark, branch="wap").count() == 100
+    # the branch alone still pins a2
+    table.drop_tag("keep")
+    with pytest.raises(TableFormatError, match="branch 'wap'"):
+        table.rollback_to_snapshot(a1.snapshot_id)
+    table.drop_branch("wap")
+    table.rollback_to_snapshot(a1.snapshot_id)
+    assert table.to_df(spark).count() == 50
+    assert not (table.location / a2.data_dir).exists()
+
+
+@pytest.mark.parametrize("kind", ["equality_keys", "positions"])
+def test_rollback_removes_merge_on_read_delete_dirs(spark, catalog, kind):
+    """Rolling back past a merge-on-read MERGE (equality-key dir) or a
+    position delete (pos dir) deletes that dir with the fork."""
+    table, df = _mk(spark, catalog, f"rb_{kind}")
+    a1 = table.append(df)
+    if kind == "equality_keys":
+        table.merge_into(
+            spark, df.filter("id < 10"), ["id"],
+            when_matched_update={"k": "k + 100"}, strategy="merge_on_read",
+        )
+        mask_dir = next(
+            s for s in table.snapshots if s.delete_keys_dir
+        ).delete_keys_dir
+    else:
+        mask_dir = table.delete_where(
+            spark, "k = 3", strategy="merge_on_read_position"
+        ).delete_pos_dir
+    assert mask_dir and (table.location / mask_dir).exists()
+    table.rollback_to_snapshot(a1.snapshot_id)
+    assert not (table.location / mask_dir).exists()
+    assert table.remove_orphan_files() == []
+    assert sorted(map(tuple, table.to_df(spark).collect())) \
+        == sorted(map(tuple, df.collect()))
+
+
 def test_time_travel_by_timestamp(spark, catalog):
     table, df = _mk(spark, catalog, "ts1")
     s1 = table.append(df.filter("id < 30"))

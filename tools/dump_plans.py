@@ -1,7 +1,10 @@
-"""Capture per-query `.explain("formatted")` for the optimization-round
-evidence: writes plans/r16/<query>_<tag>.txt for every headline query
-(tag = before|after, argv[1]). Same session sizing as bench.py so the
-plans are the bench's plans."""
+"""Capture per-query `.explain("formatted")` plans: writes
+plans/<subdir>/<query>_<tag>.txt for every headline query (or the
+comma-separated names given). Same session sizing as bench.py so the
+plans are the bench's plans; each file's header records the session's
+master.
+
+Usage: python tools/dump_plans.py <subdir> [before|after] [q1,q2,...]"""
 
 from __future__ import annotations
 
@@ -15,8 +18,11 @@ sys.path.insert(0, str(Path(__file__).parent.parent))
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2].split(",") if len(sys.argv) > 2 else None
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    subdir = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3].split(",") if len(sys.argv) > 3 else None
     sf_dir = "/root/testdata/sf0.1"
     os.environ["SPARK_GRAFT_SF_DIR"] = sf_dir
 
@@ -29,11 +35,12 @@ def main() -> None:
     )
 
     spark = get_spark(
-        app_name="r16_plans",
+        app_name="dump_plans",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    out_dir = Path(__file__).parent.parent / "plans" / "r16"
+    master = spark.sparkContext.master
+    out_dir = Path(__file__).parent.parent / "plans" / subdir
     out_dir.mkdir(parents=True, exist_ok=True)
     for name in names or HEADLINE:
         df = QUERIES[name](spark, sf_dir)
@@ -45,7 +52,7 @@ def main() -> None:
             df.explain("formatted")
         plan = buf.getvalue().rstrip().replace(str(Path.cwd()), ".")
         (out_dir / f"{name}_{tag}.txt").write_text(
-            f"# {name} ({tag}) fp:{fp} sf0.1 local[32]\n\n{plan}\n"
+            f"# {name} ({tag}) fp:{fp} sf0.1 {master}\n\n{plan}\n"
         )
         print(f"{name} fp:{fp}")
     spark.stop()
