@@ -145,8 +145,19 @@ def _box_state(drift: float, floor: float, steal_pct: float) -> tuple[bool, bool
 # in the record. Retrying a congested draw is a measurement-validity
 # fix, not a cherry-pick: the attempt to keep is decided by box
 # weather alone, never by the resulting numbers.
-STEAL_RETRY_ATTEMPTS = max(
-    1, int(os.environ.get("SPARK_GRAFT_BENCH_STEAL_RETRIES", "3"))
+def _steal_retry_attempts(raw: str | None) -> int:
+    """Attempt count from ``SPARK_GRAFT_BENCH_STEAL_RETRIES`` (at least
+    1). A malformed value falls back to the default of 3 instead of
+    crashing the import of this module and of everything importing it
+    (perfbench reaches ``run_canary`` through here)."""
+    try:
+        return max(1, int(raw if raw is not None else "3"))
+    except ValueError:
+        return 3
+
+
+STEAL_RETRY_ATTEMPTS = _steal_retry_attempts(
+    os.environ.get("SPARK_GRAFT_BENCH_STEAL_RETRIES")
 )
 
 

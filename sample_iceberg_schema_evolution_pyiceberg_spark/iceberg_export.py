@@ -696,43 +696,32 @@ def _write_position_deletes(
     would shard by file_path instead."""
     from pyspark.sql import functions as F  # noqa: PLC0415
 
-    from .partitioning import PARTITION_COL_PREFIX  # noqa: PLC0415
-    from .table_format import _align_expr  # noqa: PLC0415
-
-    cur = table.schema
     arms = []
     for s in table._live_state(table.snapshots)[0]:
         if s.sequence_number >= pred_snap.sequence_number:
             continue  # the mask covers EARLIER data only
         df = spark.read.parquet(str(table.location / s.data_dir))
-        df = df.drop(
-            *[c for c in df.columns if c.startswith(PARTITION_COL_PREFIX)]
-        )
-        sel = []
-        for f in cur.fields:
-            if f.name in df.columns:
-                sel.append(
-                    _align_expr(
-                        F.col(f.name), df.schema[f.name].dataType, f.dataType
-                    ).alias(f.name)
-                )
-            else:
-                sel.append(F.lit(None).cast(f.dataType).alias(f.name))
-        sel.append(
+        df = df.select(
+            "*",
             # manifests store plain absolute paths; _metadata returns
             # file: URIs — normalize so the tuples join back exactly
             F.regexp_replace(
                 F.col("_metadata.file_path"), "^file:/+", "/"
-            ).alias("file_path")
+            ).alias("_pos_file"),
+            F.col("_metadata.row_index").alias("_pos_index"),
         )
-        sel.append(F.col("_metadata.row_index").alias("pos"))
-        arms.append(df.select(*sel))
+        # the stored predicate names current columns: read through the
+        # scan's own rename log and alignment
+        arms.append(
+            table._as_current(df, s, keep=["_pos_file", "_pos_index"])
+        )
     if arms:
         out = arms[0]
         for a in arms[1:]:
             out = out.unionByName(a)
         out = out.filter(pred_snap.delete_predicate).select(
-            "file_path", "pos"
+            F.col("_pos_file").alias("file_path"),
+            F.col("_pos_index").alias("pos"),
         )
     else:  # predicate committed against an empty table
         out = spark.createDataFrame([], "file_path string, pos long")
@@ -870,6 +859,20 @@ def export_to_iceberg(
             "computed at export time — pass spark=<SparkSession> to "
             "export_to_iceberg (or compact() first)"
         )
+    # the exported schemas give a renamed column a fresh field id and
+    # no name mapping, so files written under the old name would read
+    # it as NULL in any Iceberg reader; compact() rewrites them
+    for s in table._live_state(table.snapshots)[0]:
+        ren = table._renames_since(s.schema_version)
+        if ren:
+            old, new = next(iter(ren.items()))
+            raise RuntimeError(
+                f"snapshot {s.snapshot_id} holds files written before "
+                f"column {old!r} was renamed to {new!r}; the export "
+                "cannot carry the rename to Iceberg readers — run "
+                "compact() first to rewrite them under the current "
+                "schema"
+            )
 
     meta_dir = table.location / "metadata"
     meta_dir.mkdir(parents=True, exist_ok=True)
@@ -1808,7 +1811,7 @@ def read_iceberg_table(
     # layout, so scan one manifest per read and union the (metadata-
     # sized) manifest arms, each aligned to the table schema (the same
     # recursive null-fill/cast/reorder the engine's own scan uses).
-    from .table_format import _align_df, _align_expr  # noqa: PLC0415
+    from .table_format import _align_df  # noqa: PLC0415
 
     mlist = (
         read_avro_jvm(spark, snap["manifest-list"])
@@ -2089,20 +2092,12 @@ def read_iceberg_table(
         for group_files, missing_defaults in _default_groups(files):
             raw = _open_data_files(group_files)
             if need_pos or lineage:
-                sel = [
-                    _align_expr(
-                        F.col(f.name), raw.schema[f.name].dataType, f.dataType
-                    ).alias(f.name)
-                    if f.name in raw.columns
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in table_schema.fields
-                ]
-                sel.append(
-                    F.regexp_replace(
+                extra = {
+                    "_ice_file": F.regexp_replace(
                         F.col("_metadata.file_path"), "^file:/+", "/"
-                    ).alias("_ice_file")
-                )
-                sel.append(F.col("_metadata.row_index").alias("_ice_pos"))
+                    ),
+                    "_ice_pos": F.col("_metadata.row_index"),
+                }
                 if lineage:
                     # physically MATERIALIZED lineage (a43): a rewrite
                     # that carried row ids wrote _row_id /
@@ -2111,23 +2106,20 @@ def read_iceberg_table(
                     # take precedence over positional inheritance
                     # (matched here by column name — this engine's
                     # parquet carries no field-id metadata)
-                    sel.append(
-                        (
-                            F.col("_row_id").cast("long")
-                            if "_row_id" in raw.columns
+                    for src, dst in (
+                        ("_row_id", "_mat_row_id"),
+                        ("_last_updated_sequence_number", "_mat_seq"),
+                    ):
+                        extra[dst] = (
+                            F.col(src).cast("long")
+                            if src in raw.columns
                             else F.lit(None).cast("long")
-                        ).alias("_mat_row_id")
-                    )
-                    sel.append(
-                        (
-                            F.col("_last_updated_sequence_number")
-                            .cast("long")
-                            if "_last_updated_sequence_number"
-                            in raw.columns
-                            else F.lit(None).cast("long")
-                        ).alias("_mat_seq")
-                    )
-                sub = raw.select(*sel)
+                        )
+                sub = _align_df(
+                    raw.select("*", *[e.alias(n) for n, e in extra.items()]),
+                    table_schema,
+                    keep=list(extra),
+                )
                 if lineage:
                     # per-file assignment base joins in broadcast
                     # (metadata-sized); _row_id = coalesce(materialized,

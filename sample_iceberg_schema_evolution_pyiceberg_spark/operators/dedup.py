@@ -346,8 +346,9 @@ def minhash_signatures(grams: DataFrame) -> DataFrame:
     # The 32 permutation mins are built as parsed expression strings —
     # one py4j round trip each instead of ~6 Column-operator calls each
     # (measured 0.21 s -> ~0.03 s of per-query plan construction,
-    # tools/floor_profile.py r8); the projected `h` alias keeps the
-    # md5 hash evaluated once per gram, not once per permutation.
+    # tools/floor_profile.py r8, retired at 87d85a9); the projected `h`
+    # alias keeps the md5 hash evaluated once per gram, not once per
+    # permutation.
     h = md5_hash60("gram") % MINHASH_PRIME
     pre = grams.select("doc_id", h.alias("h"))
     return pre.groupBy("doc_id").agg(*_minhash_mins())

@@ -23,10 +23,11 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # gate-scale input wants a handful — scheduling 32 reducers for it
 # makes every map task write 32 shuffle buckets (map x reduce block
 # overhead measured 2.4x on a 150k-row groupBy: 0.385 s at 32x32 vs
-# 0.163 s at 32x4, tools/floor_profile.py r8). AQE can only MERGE
-# partitions (the blocks are already written map-side), so the initial
-# number is the lever; AQE skew-join still SPLITS oversized partitions,
-# so a low initial count cannot wedge a skewed join. The 2 MB constant
+# 0.163 s at 32x4, tools/floor_profile.py r8, retired at 87d85a9). AQE
+# can only MERGE partitions (the blocks are already written map-side),
+# so the initial number is the lever; AQE skew-join still SPLITS
+# oversized partitions, so a low initial count cannot wedge a skewed
+# join. The 2 MB constant
 # is the measured optimum on this box (headline subset at sf0.1:
 # 32 partitions 3.44 s, 4 -> 2.68 s, 8 -> 2.39 s, 12 -> 2.60 s; 18 MB
 # input / 8 ~= 2 MB per partition); a cluster deployment overrides via

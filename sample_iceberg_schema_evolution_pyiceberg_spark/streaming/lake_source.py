@@ -23,10 +23,12 @@ way Iceberg's own streaming read walks its snapshot log:
   metadata-priced); ``read()`` runs ON EXECUTORS and yields Arrow
   record batches — one task per data file, scan parallelism = file
   count, same as the batch path;
-- schema alignment happens per file in Arrow and is RECURSIVE
-  (missing columns/struct fields -> nulls, promoted types -> cast,
-  incl. structs and arrays-of-structs), mirroring the batch scan's
-  ``_align_df``;
+- schema alignment happens per file in Arrow, the executor-side form
+  of ``LakeTable._as_current``: columns take the current names the
+  planner's ``LakeTable._renames_since`` map gives for the schema
+  version the file was written under, then align RECURSIVELY (missing
+  columns/struct fields -> nulls, promoted types -> cast, incl.
+  structs and arrays-of-structs);
 - per-batch admission control (``maxFilesPerTrigger`` option):
   offsets are file-granular — ``{"seq": N, "file": K}`` means the
   first K files of snapshot N are delivered — so a large snapshot or
@@ -104,6 +106,9 @@ _META_FIELDS = [
 class _FilePartition(InputPartition):
     file_path: str
     snapshot_id: str
+    # {name the file was written under -> current name}, planned on the
+    # driver from the table's rename log (LakeTable._renames_since)
+    renames: dict
 
 
 def _align_arrow(arr, target):
@@ -164,11 +169,14 @@ class _LakeLogPlanner:
 
         return fileio_from_options(getattr(self, "io_options", {}) or {})
 
-    def _snapshots(self):
-        """Committed snapshots, live + history, in commit order."""
+    def _table(self):
         from ..table_format import LakeTable  # noqa: PLC0415
 
-        return LakeTable.load(self.location, io=self._io()).all_snapshots()
+        return LakeTable.load(self.location, io=self._io())
+
+    def _snapshots(self):
+        """Committed snapshots, live + history, in commit order."""
+        return self._table().all_snapshots()
 
     def _files_of(self, s) -> list[str]:
         """A snapshot's parquet files in a STABLE order (offsets index
@@ -296,9 +304,10 @@ class _LakeLogPlanner:
         from ..table_format import TableFormatError  # noqa: PLC0415
 
         start_pos, end_pos = self._pos(start), self._pos(end)
+        table = self._table()
         rng = [
             s
-            for s in self._snapshots()
+            for s in table.all_snapshots()
             if (s.sequence_number, float("inf")) > start_pos
             and (s.sequence_number, 0) <= end_pos
         ]
@@ -371,44 +380,54 @@ class _LakeLogPlanner:
                 and end_pos[1] != float("inf")
                 else len(files)
             )
+            # each file's rename map comes from the schema version it
+            # was written under: a manifest fold's files keep their
+            # SOURCE snapshots' versions
+            renames = {
+                os.path.join(self.location, x.data_dir, ""):
+                    table._renames_since(x.schema_version)
+                for x in table._live_state([s])[0]
+            }
             parts.extend(
-                _FilePartition(f, s.snapshot_id) for f in files[lo:hi]
+                _FilePartition(
+                    f,
+                    s.snapshot_id,
+                    next(r for d, r in renames.items() if f.startswith(d)),
+                )
+                for f in files[lo:hi]
             )
         return parts
 
     def _aligned_table(self, partition: _FilePartition):
         """One parquet file -> Arrow table aligned to the stream
-        schema. Alignment mirrors the batch scan's ``_align_df``
-        (recursive — see ``_align_arrow``); hidden ``_p_*`` partition
-        columns drop, CDC metadata columns append."""
+        schema, the Arrow form of ``LakeTable._as_current``: hidden
+        ``_p_*`` partition columns drop, columns take the current names
+        the planner mapped from the rename log (``partition.renames``),
+        alignment is recursive (``_align_arrow``), and the CDC metadata
+        columns append."""
         import pyarrow as pa  # noqa: PLC0415
         import pyarrow.parquet as pq  # noqa: PLC0415
         from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
 
         from ..partitioning import PARTITION_COL_PREFIX  # noqa: PLC0415
 
-        data_fields = self.schema.fields[: -len(_META_FIELDS)]
-        target = to_arrow_schema(T.StructType(data_fields))
+        out_schema = to_arrow_schema(self.schema)
         src = pq.read_table(partition.file_path)
         src = src.drop_columns(
             [c for c in src.column_names if c.startswith(PARTITION_COL_PREFIX)]
         )
+        src = src.rename_columns(
+            [partition.renames.get(c, c) for c in src.column_names]
+        )
         n = src.num_rows
-        cols = []
-        for field in target:
-            if field.name in src.column_names:
-                cols.append(_align_arrow(src[field.name], field.type))
-            else:
-                cols.append(pa.nulls(n, type=field.type))
+        cols = [
+            _align_arrow(src[f.name], f.type)
+            if f.name in src.column_names
+            else pa.nulls(n, type=f.type)
+            for f in list(out_schema)[: -len(_META_FIELDS)]
+        ]
         cols.append(pa.array([partition.snapshot_id] * n, type=pa.string()))
         cols.append(pa.array(["insert"] * n, type=pa.string()))
-        out_schema = pa.schema(
-            list(target)
-            + [
-                pa.field("_snapshot_id", pa.string()),
-                pa.field("_change_type", pa.string()),
-            ]
-        )
         return pa.table(cols, schema=out_schema)
 
 

@@ -1732,6 +1732,22 @@ class LakeTable:
             *[F.col(c).alias(ren.get(c, c)) for c in df.columns]
         )
 
+    def _as_current(
+        self, df: DataFrame, s: Snapshot, keep: "list[str] | None" = None
+    ) -> DataFrame:
+        """A raw read of data entry ``s`` in current-schema terms: the
+        hidden ``_p_*`` partition columns drop, names the files were
+        written under map forward through the rename log, and the
+        columns project onto the current schema. ``keep`` names
+        bookkeeping columns (row positions, lineage) carried through
+        as-is. Every Spark read of a data entry's files goes through
+        here, so no reader can skip the rename log."""
+        df = df.drop(
+            *[c for c in df.columns if c.startswith(PARTITION_COL_PREFIX)]
+        )
+        df = self._map_renames(df, s.schema_version)
+        return _align_df(df, self.schema, keep)
+
     def commit_spec(self, new_spec: PartitionSpec) -> int:
         sid = int(self.meta["current_spec_id"]) + 1
         self.meta["specs"][str(sid)] = new_spec.to_json()
@@ -1745,27 +1761,17 @@ class LakeTable:
         self, df: DataFrame, lineage_cols: bool = False
     ) -> tuple[DataFrame, list[str]]:
         schema = self.schema
-        sel = [
-            _align_expr(F.col(f.name), _df_type(df, f.name), f.dataType).alias(
-                f.name
-            )
-            if f.name in df.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ]
+        keep = None
         if lineage_cols:
             # a43: a lineage-materializing rewrite carries the v3
             # lineage columns PHYSICALLY into its data files. Explicit
             # opt-in only — a stray user column of the same name on a
             # plain append must keep being projected away, not
             # silently minted as materialized lineage.
-            sel += [
-                F.col("_row_id").cast("long").alias("_row_id"),
-                F.col("_last_updated_sequence_number")
-                .cast("long")
-                .alias("_last_updated_sequence_number"),
-            ]
-        aligned = df.select(*sel)
+            keep = ["_row_id", "_last_updated_sequence_number"]
+            for c in keep:
+                df = df.withColumn(c, F.col(c).cast("long"))
+        aligned = _align_df(df, schema, keep)
         spec = self.partition_spec
         sbf = self._spark_bucket_field()
         dual = self._bucket_layout_mode() == "dual"
@@ -4499,8 +4505,6 @@ class LakeTable:
         full of small files' that drives compaction targeting at
         100 TB). Unpartitioned snapshots aggregate under an empty
         partition map."""
-        from urllib.parse import unquote  # noqa: PLC0415
-
         import pyarrow.parquet as pq  # noqa: PLC0415
 
         agg: dict[tuple, list] = {}
@@ -4525,25 +4529,9 @@ class LakeTable:
                     for p in sorted(root.rglob("*.parquet"))
                 ]
             for path, size, nrec in entries:
-                # hive dirs carry the hidden-column prefix
-                # (_p_bucket_p=3); surface the spec's field name.
-                # Hive's null sentinel decodes to None — Iceberg's
-                # partitions table reports null partition values as
-                # null, not as the sentinel string
-                def _val(seg: str) -> "str | None":
-                    v = unquote(seg.split("=", 1)[1])
-                    return None if v == "__HIVE_DEFAULT_PARTITION__" else v
-
-                parts = tuple(
-                    (
-                        seg.split("=", 1)[0].removeprefix(
-                            PARTITION_COL_PREFIX
-                        ),
-                        _val(seg),
-                    )
-                    for seg in path.split("/")[:-1]
-                    if "=" in seg
-                )
+                # spec field names; null partition values report as
+                # null, not as the hive sentinel string
+                parts = tuple(_partition_values_from_path(path).items())
                 key = (parts, s.spec_id)
                 slot = agg.setdefault(key, [0, 0, 0])
                 slot[0] += 1
@@ -4729,7 +4717,7 @@ class LakeTable:
         for s in datas:
             groups.setdefault((s.schema_version, s.spec_id), []).append(s)
         parts: list[DataFrame] = []
-        for (sv, sid), group in sorted(groups.items()):
+        for (_, sid), group in sorted(groups.items()):
             spec = self.spec_at(sid)
             for s in group:
                 # manifest-level file pruning (Iceberg's scan
@@ -4869,13 +4857,6 @@ class LakeTable:
                         ).alias("_pos_file"),
                         F.col("_metadata.row_index").alias("_pos_index"),
                     )
-                df = df.drop(
-                    *[
-                        c
-                        for c in df.columns
-                        if c.startswith(PARTITION_COL_PREFIX)
-                    ]
-                )
                 if _with_lineage_cols:
                     # physically materialized lineage (a43): a
                     # lineage-carrying rewrite wrote _row_id /
@@ -4892,13 +4873,9 @@ class LakeTable:
                             if src in df.columns
                             else F.lit(None).cast("long"),
                         )
-                # rename log: files written pre-rename carry the old
-                # column names; map them forward so name-based
-                # alignment (and every consumer) sees current names
-                df = self._map_renames(df, sv)
-                df = _align_df(
+                df = self._as_current(
                     df,
-                    cur,
+                    s,
                     keep=(
                         (["_pos_file", "_pos_index"] if need_pos else [])
                         + (
@@ -5086,8 +5063,10 @@ class LakeTable:
         """Resolve a (from, to] incremental-read range over the full
         commit log: refs resolve (tags/branches), unknown or expired
         endpoints raise, and ``lo``/``hi`` index into the returned
-        canonical history. Shared by ``changes_between`` (append-only)
-        and ``changelog_between`` (full CDC)."""
+        canonical history. ``changelog_between`` (full CDC) reads the
+        range it resolves; ``changes_between`` resolves it only to
+        refuse non-append entries, then reads through
+        ``changelog_between``."""
         hist = self.all_snapshots()
         ids = [s.snapshot_id for s in hist]
 
@@ -5165,32 +5144,11 @@ class LakeTable:
                 f"{bad} (operation rewrites the live set; no append-only "
                 "row delta exists) — read a full snapshot instead"
             )
-        cur = self.schema
-        tagged = T.StructType(
-            list(cur.fields)
-            + [
-                T.StructField("_snapshot_id", T.StringType()),
-                T.StructField("_change_type", T.StringType()),
-            ]
-        )
-        if not rng:
-            return spark.createDataFrame([], tagged)
-        parts: list[DataFrame] = []
-        for s in rng:
-            df = spark.read.parquet(str(self.location / s.data_dir))
-            df = df.drop(
-                *[c for c in df.columns if c.startswith(PARTITION_COL_PREFIX)]
-            )
-            df = self._map_renames(df, s.schema_version)
-            parts.append(
-                _align_df(df, cur)
-                .withColumn("_snapshot_id", F.lit(s.snapshot_id))
-                .withColumn("_change_type", F.lit("insert"))
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        # an append-only range is exactly what the changelog emits as
+        # inserts (it skips the 'replace' folds by label)
+        return self.changelog_between(
+            spark, from_snapshot, to_snapshot
+        ).drop("_change_ordinal")
 
     def changelog_between(
         self,
@@ -5303,16 +5261,8 @@ class LakeTable:
             s = hist[i]
             if s.operation == "append":
                 df = spark.read.parquet(str(self.location / s.data_dir))
-                df = df.drop(
-                    *[
-                        c
-                        for c in df.columns
-                        if c.startswith(PARTITION_COL_PREFIX)
-                    ]
-                )
-                df = self._map_renames(df, s.schema_version)
                 parts.append(
-                    _tag(_align_df(df, cur), ordinal, s.snapshot_id,
+                    _tag(self._as_current(df, s), ordinal, s.snapshot_id,
                          "insert")
                 )
             elif s.is_row_delete:
@@ -5650,10 +5600,6 @@ def scd2_apply(
 # ---------------------------------------------------------------------------
 
 
-def _df_type(df: DataFrame, name: str) -> T.DataType:
-    return df.schema[name].dataType
-
-
 def _align_df(
     df: DataFrame,
     target: T.StructType,
@@ -5661,12 +5607,14 @@ def _align_df(
 ) -> DataFrame:
     """Project ``df`` onto ``target``'s fields (promoting/nulling as
     needed); ``keep`` names extra passthrough columns appended as-is
-    (scan-position bookkeeping for position-delete masks)."""
+    (row positions, lineage). THE projection onto a schema: writes,
+    scans and the export's reads all go through it."""
+    have = {f.name: f.dataType for f in df.schema.fields}
     cols = []
     for f in target.fields:
-        if f.name in df.columns:
+        if f.name in have:
             cols.append(
-                _align_expr(F.col(f.name), _df_type(df, f.name), f.dataType).alias(
+                _align_expr(F.col(f.name), have[f.name], f.dataType).alias(
                     f.name
                 )
             )

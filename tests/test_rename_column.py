@@ -109,6 +109,82 @@ def test_rename_incremental_reads_map_forward(spark, tmp_path):
     del s1
 
 
+def _renamed_table(spark, tmp_path, fold=False):
+    """(id, grp, tag): 10 rows, RENAME grp -> g, 10 more rows under the
+    new name; ``fold`` folds both appends into one manifest rewrite, so
+    a fresh stream base-loads files written under two schema versions."""
+    src = spark.range(0, 20).select(
+        F.col("id"),
+        (F.col("id") % 4).alias("grp"),
+        F.concat(F.lit("t"), F.col("id").cast("string")).alias("tag"),
+    )
+    cat = LakeCatalog(tmp_path / "wh")
+    tbl = cat.create_table("db", "rv", src.schema)
+    tbl.append(src.filter("id < 10"))
+    tbl.rename_column("grp", "g")
+    tbl.append(src.filter("id >= 10").withColumnRenamed("grp", "g"))
+    if fold:
+        tbl.rewrite_manifests()
+    return tbl
+
+
+def _stream_rows(spark, tbl, tmp_path, name):
+    q = (
+        tbl.stream_changes(spark)
+        .writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", str(tmp_path / f"chk_{name}"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return spark.table(name)
+
+
+@pytest.mark.parametrize(
+    "reader",
+    ["to_df", "changes_between", "changelog_between", "stream_changes",
+     "stream_changes_fold"],
+)
+def test_rename_values_through_every_reader(spark, tmp_path, reader):
+    """Every reader maps pre-rename files through the rename log: the
+    renamed column carries the written values, never NULL."""
+    tbl = _renamed_table(spark, tmp_path, fold=reader.endswith("_fold"))
+    if reader.startswith("stream_changes"):
+        df = _stream_rows(spark, tbl, tmp_path, f"rv_{reader}")
+    else:
+        df = getattr(tbl, reader)(spark)
+    assert "grp" not in df.columns
+    got = sorted(
+        (r.id, r.g, r.tag) for r in df.select("id", "g", "tag").collect()
+    )
+    assert got == [(i, i % 4, f"t{i}") for i in range(20)]
+
+
+def test_export_refuses_pre_rename_files(spark, tmp_path):
+    """The export cannot carry a rename to Iceberg readers yet (the
+    renamed column gets a fresh field id and no name mapping), so it
+    refuses before writing anything and points at compact(); after
+    compact() the export reads back every value."""
+    from sample_iceberg_schema_evolution_pyiceberg_spark.iceberg_export import (
+        export_to_iceberg,
+        read_iceberg_table,
+    )
+
+    tbl = _renamed_table(spark, tmp_path)
+    with pytest.raises(RuntimeError, match=r"'grp'.*'g'.*compact\(\)"):
+        export_to_iceberg(tbl, spark=spark)
+    assert not (tbl.location / "metadata").exists()
+    tbl.compact(spark)
+    tbl = tbl.refresh()
+    export_to_iceberg(tbl, spark=spark)
+    back, _doc = read_iceberg_table(spark, tbl.location)
+    got = sorted((r.id, r.g) for r in back.select("id", "g").collect())
+    assert got == [(i, i % 4) for i in range(20)]
+
+
 def test_rename_guards(spark, tmp_path):
     src = spark.range(0, 50).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("amount")
