@@ -660,26 +660,16 @@ def _variant_json_udf():
     )
 
 
-def _list_data_files(
-    table: LakeTable, snap: Snapshot
-) -> list[tuple[str, dict[str, str]]]:
-    """(absolute parquet path, {partition name: raw dir value}) for one
-    snapshot's data directory. Driver-side listing of one snapshot's
-    files — the same metadata-scale work Iceberg itself does at commit."""
-    base = table.location / snap.data_dir
-    out: list[tuple[str, dict[str, str]]] = []
-    for root, _dirs, files in os.walk(base):
-        parts: dict[str, str] = {}
-        rel = os.path.relpath(root, base)
-        if rel != ".":
-            for seg in rel.split(os.sep):
-                if "=" in seg:
-                    k, v = seg.split("=", 1)
-                    parts[k.removeprefix(PARTITION_COL_PREFIX)] = v
-        for fn in files:
-            if fn.endswith(".parquet"):
-                out.append((os.path.join(root, fn), parts))
-    return sorted(out)
+def _raw_partition_values(rel: str) -> dict[str, str]:
+    """{partition name: raw hive dir value} of a data file, from the
+    directory components of its path relative to its snapshot dir —
+    still escaped, the form ``encode_partition_value`` decodes."""
+    return {
+        k.removeprefix(PARTITION_COL_PREFIX): v
+        for k, _, v in (
+            seg.partition("=") for seg in Path(rel).parent.parts if "=" in seg
+        )
+    }
 
 
 def _write_position_deletes(
@@ -971,18 +961,17 @@ def export_to_iceberg(
         }
 
     def _delete_file_entries(
-        files: list[str], content: int, eq_ids: list[int] | None
+        files: list[dict[str, Any]], content: int, eq_ids: list[int] | None
     ) -> list[dict[str, Any]]:
         out = []
-        for fpath in files:
-            md = pq.ParquetFile(fpath).metadata
+        for f in files:
             df_rec: dict[str, Any] = {
                 "content": content,
-                "file_path": fpath,
+                "file_path": f["path"],
                 "file_format": "PARQUET",
                 "partition": {},
-                "record_count": md.num_rows,
-                "file_size_in_bytes": os.path.getsize(fpath),
+                "record_count": f["record_count"],
+                "file_size_in_bytes": f["size_bytes"],
             }
             if eq_ids is not None:
                 df_rec["equality_ids"] = eq_ids
@@ -997,34 +986,42 @@ def export_to_iceberg(
             )
         return out
 
-    def _parquet_files_under(root: Path) -> list[str]:
-        return sorted(
-            os.path.join(dp, f)
-            for dp, _dirs, fs in os.walk(root)
-            for f in fs
-            if f.endswith(".parquet")
-        )
-
-    # v3 row lineage (a42): when EVERY live data snapshot's engine
-    # manifest carries commit-time first_row_id assignments, the
-    # export materializes them as explicit avro-level fields (data
-    # file 142, manifest-list 520) and uses the recorded values for
-    # the metadata-level assignment state; otherwise (pre-a42 or
-    # rewrite histories) it falls back to the derived cursor with no
-    # avro-level fields — the documented conformance-row-39 shape.
-    lineage_maps: dict[str, dict[str, int]] = {}
-    lineage_ok = fv == 3
-    if lineage_ok:
-        for snap in datas:
-            files = snap.files
-            if files is None or any(
-                f.get("first_row_id") is None for f in files
-            ):
-                lineage_ok = False
-                break
-            lineage_maps[snap.snapshot_id] = {
-                f["path"]: int(f["first_row_id"]) for f in files
+    def _own_outputs(root: Path) -> list[dict[str, Any]]:
+        """Manifest-shaped entries (absolute path, record count, byte
+        size) of the parquet files this export wrote under ``root``
+        (its metadata/deletes outputs), in path order."""
+        return [
+            {
+                "path": p,
+                "record_count": pq.ParquetFile(p).metadata.num_rows,
+                "size_bytes": os.path.getsize(p),
             }
+            for p in sorted(
+                os.path.join(dp, f)
+                for dp, _dirs, fs in os.walk(root)
+                for f in fs
+                if f.endswith(".parquet")
+            )
+        ]
+
+    def _manifest_files(snap: Snapshot) -> list[dict[str, Any]]:
+        """The engine manifest of ``snap`` (its file list) in path
+        order, with the absolute paths the exported manifests hold."""
+        return [
+            {**f, "path": str(table.location / f["path"])}
+            for f in sorted(snap.files, key=lambda f: f["path"])
+        ]
+
+    # v3 row lineage (a42): when EVERY live data file's engine
+    # manifest entry carries a commit-time first_row_id, the export
+    # materializes them as explicit avro-level fields (data file 142,
+    # manifest-list 520) and uses the recorded values for the
+    # metadata-level assignment state; otherwise (pre-a42 or rewrite
+    # histories) it falls back to the derived cursor with no
+    # avro-level fields — the documented conformance-row-39 shape.
+    lineage_ok = fv == 3 and all(
+        f.get("first_row_id") is not None for s in datas for f in s.files
+    )
 
     manifests: list[dict[str, Any]] = []
     for snap in live:
@@ -1042,10 +1039,9 @@ def export_to_iceberg(
                         f"equality-delete key column {e} not a known "
                         "schema column"
                     ) from None
-                files = _parquet_files_under(
-                    table.location / snap.delete_keys_dir
+                entries = _delete_file_entries(
+                    _manifest_files(snap), 2, eq_ids
                 )
-                entries = _delete_file_entries(files, 2, eq_ids)
             elif snap.delete_pos_dir:
                 # native position delete: the lake file already holds
                 # (file_path, pos) tuples, but with TABLE-RELATIVE
@@ -1076,7 +1072,7 @@ def export_to_iceberg(
                         .parquet(str(pos_dir))
                     )
                 entries = _delete_file_entries(
-                    _parquet_files_under(pos_dir), 1, None
+                    _own_outputs(pos_dir), 1, None
                 )
             else:
                 # predicate delete -> position-delete files computed
@@ -1089,7 +1085,7 @@ def export_to_iceberg(
                 if not pos_dir.exists():
                     _write_position_deletes(spark, table, snap, pos_dir)
                 entries = _delete_file_entries(
-                    _parquet_files_under(pos_dir), 1, None
+                    _own_outputs(pos_dir), 1, None
                 )
             if fv == 3 and not snap.delete_keys_dir:
                 # v3: the position tuples become deletion vectors —
@@ -1113,10 +1109,11 @@ def export_to_iceberg(
             entry_schema = _manifest_entry_schema(
                 p_fields, fv, include_lineage_fields=lineage_ok
             )
-            lin_map = lineage_maps.get(snap.snapshot_id, {})
             entries = []
-            for fpath, rawparts in _list_data_files(table, snap):
-                md = pq.ParquetFile(fpath).metadata
+            for f in _manifest_files(snap):
+                rawparts = _raw_partition_values(
+                    os.path.relpath(f["path"], table.location / snap.data_dir)
+                )
                 partition = {
                     pf["name"]: encode_partition_value(
                         pf["transform"],
@@ -1130,11 +1127,11 @@ def export_to_iceberg(
                     "snapshot_id": sid,
                     "data_file": {
                         "content": 0,
-                        "file_path": fpath,
+                        "file_path": f["path"],
                         "file_format": "PARQUET",
                         "partition": partition,
-                        "record_count": md.num_rows,
-                        "file_size_in_bytes": os.path.getsize(fpath),
+                        "record_count": f["record_count"],
+                        "file_size_in_bytes": f["size_bytes"],
                         "block_size_in_bytes": 64 * 1024 * 1024,
                     },
                 }
@@ -1142,16 +1139,9 @@ def export_to_iceberg(
                     entry["sequence_number"] = None  # inherited
                     entry["file_sequence_number"] = None
                 if lineage_ok:
-                    rel = str(Path(fpath).relative_to(table.location))
-                    fr = lin_map.get(rel)
-                    if fr is None:
-                        raise ValueError(
-                            f"data file {rel!r} is on disk but absent "
-                            "from the engine manifest's row-lineage "
-                            "assignments — refusing to export "
-                            "inconsistent lineage"
-                        )
-                    entry["data_file"]["first_row_id"] = fr
+                    entry["data_file"]["first_row_id"] = int(
+                        f["first_row_id"]
+                    )
                 entries.append(entry)
         mpath = meta_dir / f"manifest-{snap.snapshot_id}.avro"
         write_ocf(

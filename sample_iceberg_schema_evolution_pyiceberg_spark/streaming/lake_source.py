@@ -1,12 +1,11 @@
 """Log-driven streaming source for lake tables (Spark 4 Python Data
 Source API): the snapshot log IS the offset log.
 
-``LakeTable.stream_changes`` (table_format.py) can also stream via
-Spark's file source, which trusts the *filesystem* — uncommitted
-debris from a crashed write would be streamed, and type-promoted
-history can fail the fixed file-source schema. This source closes
-both gaps by driving micro-batches from the COMMITTED metadata, the
-way Iceberg's own streaming read walks its snapshot log:
+``LakeTable.stream_changes`` (table_format.py) streams through this
+source, which drives micro-batches from the COMMITTED metadata, the
+way Iceberg's own streaming read walks its snapshot log — never from
+a filesystem listing, so uncommitted debris from a crashed write is
+never streamed:
 
 - offsets are snapshot sequence numbers (``{"seq": N}``): a
   micro-batch is exactly the append snapshots committed in
@@ -19,8 +18,9 @@ way Iceberg's own streaming read walks its snapshot log:
   checkpoint-recovered) stream's range fails loudly — the consumer
   holds pre-rewrite rows, so no append-only delta exists
   (``changes_between``'s contract);
-- ``partitions()`` lists each snapshot's parquet files (driver-side,
-  metadata-priced); ``read()`` runs ON EXECUTORS and yields Arrow
+- ``partitions()`` takes each snapshot's parquet files from its
+  commit manifest (``Snapshot.files``; driver-side, metadata-priced,
+  no listing); ``read()`` runs ON EXECUTORS and yields Arrow
   record batches — one task per data file, scan parallelism = file
   count, same as the batch path;
 - schema alignment happens per file in Arrow, the executor-side form
@@ -63,8 +63,7 @@ RECONSTRUCTIBLE there: ``stream_changes`` serializes
 rebuilds a live backend via ``fileio_from_options`` — local
 filesystems and ``DirectoryObjectStore``-backed object stores stream
 alike. Only process-local in-memory fakes cannot (``to_options``
-returns None; ``stream_changes`` raises before starting and points at
-``source="files"``).
+returns None; ``stream_changes`` raises before starting).
 
 Usage::
 
@@ -179,29 +178,15 @@ class _LakeLogPlanner:
         return self._table().all_snapshots()
 
     def _files_of(self, s) -> list[str]:
-        """A snapshot's parquet files in a STABLE order (offsets index
-        into this list; snapshot dirs are immutable once committed).
-        Manifest-rewrite snapshots (rewrite_manifests) carry no dir of
-        their own — their union manifest IS the file list (the same
-        data files, in their original dirs), which makes them valid
-        base loads for fresh streams."""
-        if not s.data_dir:
-            if s.source_snapshots and s.files:
-                return sorted(
-                    os.path.join(self.location, f["path"])
-                    for f in s.files
-                    if f["path"].endswith(".parquet")
-                )
+        """A snapshot's parquet files — its commit manifest, never a
+        directory listing — as sorted absolute paths, a STABLE order
+        (offsets index into this list). A manifest rewrite
+        (rewrite_manifests) lists the same files as its sources, which
+        makes it a valid base load for fresh streams; a delete entry
+        contributes no data files."""
+        if s.is_row_delete:
             return []
-        out = []
-        root = os.path.join(self.location, s.data_dir)
-        for dirpath, _dirs, files in os.walk(root):
-            out.extend(
-                os.path.join(dirpath, f)
-                for f in files
-                if f.endswith(".parquet")
-            )
-        return sorted(out)
+        return sorted(os.path.join(self.location, f["path"]) for f in s.files)
 
     @staticmethod
     def _pos(off: dict) -> tuple[int, float]:
@@ -380,20 +365,16 @@ class _LakeLogPlanner:
                 and end_pos[1] != float("inf")
                 else len(files)
             )
-            # each file's rename map comes from the schema version it
-            # was written under: a manifest fold's files keep their
-            # SOURCE snapshots' versions
-            renames = {
-                os.path.join(self.location, x.data_dir, ""):
-                    table._renames_since(x.schema_version)
-                for x in table._live_state([s])[0]
-            }
+            # each file's rename map comes from the schema version of
+            # the entry that lists it: a manifest fold's files keep
+            # their SOURCE snapshots' versions
+            renames = {}
+            for x in table._live_state([s])[0]:
+                ren = table._renames_since(x.schema_version)
+                for f in x.files:
+                    renames[os.path.join(self.location, f["path"])] = ren
             parts.extend(
-                _FilePartition(
-                    f,
-                    s.snapshot_id,
-                    next(r for d, r in renames.items() if f.startswith(d)),
-                )
+                _FilePartition(f, s.snapshot_id, renames[f])
                 for f in files[lo:hi]
             )
         return parts

@@ -154,10 +154,11 @@ class Snapshot:
     # entry per parquet file of this snapshot's payload dir (data_dir,
     # or delete_keys_dir for equality-delete entries) with byte size
     # and footer row count, collected at commit exactly like Iceberg's
-    # commit-time stats. Lets files_df / export / scan-time broadcast
-    # sizing run O(metadata) with NO data-plane listing. None on
-    # snapshots from pre-manifest metadata (consumers fall back to a
-    # listing).
+    # commit-time stats. THE file list of the entry: files_df, the
+    # export, the log stream and scan-time broadcast sizing read it,
+    # never a directory listing. Entries loaded from pre-manifest
+    # metadata get it once at load (LakeTable.__init__), so it is None
+    # only on predicate deletes, which own no directory.
     files: list[dict[str, Any]] | None = None
     # manifest-rewrite marker (Iceberg's ``rewrite_manifests``): a
     # metadata-only 'replace' snapshot whose state is EXACTLY the
@@ -1306,6 +1307,24 @@ class LakeTable:
         # object-store backend; a cloud deployment passes the FileIO
         # that fronts the same store Spark writes to.
         self.data_io = data_io or LocalFileIO()
+        # pre-manifest metadata: collect the commit-time file list the
+        # original commits predate, once (footer-priced); the next
+        # commit persists it. A current document costs a key test per
+        # entry and no IO.
+        for s in [
+            *meta["snapshots"],
+            *meta.get("snapshot_history", []),
+            *(
+                e
+                for b in (meta.get("branches") or {}).values()
+                for e in b["snapshots"]
+            ),
+        ]:
+            dirs = Snapshot.from_json(s).dirs if s.get("files") is None else []
+            if dirs:
+                s["files"] = [
+                    f for d in dirs for f in self._collect_manifest(d)
+                ]
 
     # -- metadata ----------------------------------------------------------
 
@@ -2029,7 +2048,7 @@ class LakeTable:
             self._segment_ending_at(live[-1].snapshot_id) if live else []
         )
         for s in seg:
-            if s.is_row_delete or s.expired or not s.files:
+            if s.is_row_delete or s.expired:
                 continue  # delete manifests count key tuples, not rows
             for f in s.files:
                 tot_bytes += f["size_bytes"]
@@ -2420,7 +2439,7 @@ class LakeTable:
         for snap_json in br["snapshots"][len(main_ids):]:
             if snap_json.get("operation") != "append":
                 continue
-            for f in snap_json.get("files") or []:
+            for f in snap_json["files"]:
                 if f.get("first_row_id") is None:
                     f["first_row_id"] = cursor
                     cursor += int(f["record_count"])
@@ -3496,14 +3515,7 @@ class LakeTable:
             )
         if len(live) < 2:
             return None
-        union: list[dict[str, Any]] = []
-        for s in live:
-            if s.files is not None:
-                union.extend(s.files)
-            elif s.data_dir:
-                # pre-manifest metadata: collect the stats pass the
-                # original commit predates (footer-priced, once)
-                union.extend(self._collect_manifest(s.data_dir))
+        union = [f for s in live for f in s.files]
         import copy  # noqa: PLC0415
 
         # same poisoned-handle guard as compact_position_deletes: a
@@ -3959,7 +3971,6 @@ class LakeTable:
     def stream_changes(
         self,
         spark: SparkSession,
-        source: str = "log",
         max_files_per_trigger: int = 0,
         reader_mode: "str | None" = None,
     ) -> DataFrame:
@@ -3971,93 +3982,68 @@ class LakeTable:
         ranges; a rewrite (overwrite/compaction/row-level DML) in the
         consumed range fails the stream loudly.
 
-        ``source="log"`` (default) drives micro-batches from the
-        COMMITTED snapshot log via the Python Data Source API
-        (streaming/lake_source.py): offsets are snapshot sequence
-        numbers, so uncommitted data-dir debris can never be streamed,
-        rows carry ``_snapshot_id``/``_change_type`` CDC columns, and
-        per-file Arrow alignment handles add-column AND type-promoted
-        history. Scan parallelism is one executor task per data file;
-        per-batch planning cost is metadata-priced (the delta's file
-        list).
-
-        ``source="files"`` is Spark's built-in parquet file source
-        over the data directory — fewer moving parts (no Python
-        data-source workers) when the trust boundary is acceptable:
-        it lists the FILESYSTEM, so crashed-write debris would stream
-        (run ``remove_orphan_files`` first, never mid-stream), no CDC
-        columns, and type-promoted history needs a compaction before
-        streaming (the fixed file-source schema can't cast per file).
+        Micro-batches are driven from the COMMITTED snapshot log via
+        the Python Data Source API (streaming/lake_source.py): offsets
+        are snapshot sequence numbers and each snapshot's files are
+        its commit manifest, so uncommitted data-dir debris can never
+        be streamed, rows carry ``_snapshot_id``/``_change_type`` CDC
+        columns, and per-file Arrow alignment handles renamed,
+        added-column AND type-promoted history. Scan parallelism is
+        one executor task per data file; per-batch planning cost is
+        metadata-priced (the delta's file list).
         """
-        if source == "log":
-            if any(s.is_row_delete for s in self.snapshots):
-                raise TableFormatError(
-                    "live merge-on-read delete entries have no "
-                    "append-only streaming representation — compact() "
-                    "first to fold them into data"
-                )
-            # the reader runs in its own worker process and re-reads
-            # the snapshot log each batch: it needs a RECONSTRUCTIBLE
-            # handle to this table's metadata backend, serialized into
-            # the data-source options (FileIO.to_options / the
-            # fileio_from_options inverse). Store-backed lakes stream
-            # exactly like local ones; only process-local in-memory
-            # fakes cannot.
-            io_opts = self.io.to_options()
-            if io_opts is None:
-                raise TableFormatError(
-                    "log-driven streaming needs a process-shareable "
-                    "metadata backend (FileIO.to_options returned "
-                    f"None for {type(self.io).__name__}; in-memory "
-                    "stores live only in this process) — use a "
-                    "DirectoryObjectStore-backed ObjectStoreFileIO, "
-                    "LocalFileIO, or stream_changes(spark, "
-                    "source='files')"
-                )
-            from .streaming.lake_source import (  # noqa: PLC0415
-                SOURCE_NAME,
-                register_lake_stream,
-            )
-
-            register_lake_stream(spark)
-            reader = spark.readStream.format(SOURCE_NAME).option(
-                "path", str(self.location)
-            )
-            for k, v in io_opts.items():
-                reader = reader.option(k, v)
-            if max_files_per_trigger:
-                # bound each micro-batch's file count (backfill /
-                # catch-up admission control; see lake_source.py).
-                # CONTRACT: combine with LIVE triggers only — under
-                # Trigger.AvailableNow, Python sources fall back to
-                # single-batch execution, so the cap bounds the WHOLE
-                # run and the query stops after one quantum (a prefix
-                # read; the checkpoint resumes next start, but a
-                # one-shot run has silently truncated).
-                reader = reader.option(
-                    "maxFilesPerTrigger", str(max_files_per_trigger)
-                )
-            if reader_mode:
-                # 'simple' | 'distributed' (lake_source routing).
-                # reader=distributed + a cap = executor-parallel
-                # admission-controlled backfill (VERDICT r10 item 7).
-                reader = reader.option("reader", reader_mode)
-            return reader.load()
-        if source != "files":
-            raise ValueError(f"unknown stream source {source!r}")
         if any(s.is_row_delete for s in self.snapshots):
             raise TableFormatError(
-                "live merge-on-read delete entries are invisible to "
-                "the file source (it lists the filesystem) — compact() "
-                "first or use the log-driven source"
+                "live merge-on-read delete entries have no "
+                "append-only streaming representation — compact() "
+                "first to fold them into data"
             )
-        self.data_io.mkdirs(str(self.location / "data"))
-        return (
-            spark.readStream.schema(self.schema)
-            .option("recursiveFileLookup", "true")
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(str(self.location / "data"))
+        # the reader runs in its own worker process and re-reads
+        # the snapshot log each batch: it needs a RECONSTRUCTIBLE
+        # handle to this table's metadata backend, serialized into
+        # the data-source options (FileIO.to_options / the
+        # fileio_from_options inverse). Store-backed lakes stream
+        # exactly like local ones; only process-local in-memory
+        # fakes cannot.
+        io_opts = self.io.to_options()
+        if io_opts is None:
+            raise TableFormatError(
+                "log-driven streaming needs a process-shareable "
+                "metadata backend (FileIO.to_options returned "
+                f"None for {type(self.io).__name__}; in-memory "
+                "stores live only in this process) — use a "
+                "DirectoryObjectStore-backed ObjectStoreFileIO or "
+                "LocalFileIO"
+            )
+        from .streaming.lake_source import (  # noqa: PLC0415
+            SOURCE_NAME,
+            register_lake_stream,
         )
+
+        register_lake_stream(spark)
+        reader = spark.readStream.format(SOURCE_NAME).option(
+            "path", str(self.location)
+        )
+        for k, v in io_opts.items():
+            reader = reader.option(k, v)
+        if max_files_per_trigger:
+            # bound each micro-batch's file count (backfill /
+            # catch-up admission control; see lake_source.py).
+            # CONTRACT: combine with LIVE triggers only — under
+            # Trigger.AvailableNow, Python sources fall back to
+            # single-batch execution, so the cap bounds the WHOLE
+            # run and the query stops after one quantum (a prefix
+            # read; the checkpoint resumes next start, but a
+            # one-shot run has silently truncated).
+            reader = reader.option(
+                "maxFilesPerTrigger", str(max_files_per_trigger)
+            )
+        if reader_mode:
+            # 'simple' | 'distributed' (lake_source routing).
+            # reader=distributed + a cap = executor-parallel
+            # admission-controlled backfill (VERDICT r10 item 7).
+            reader = reader.option("reader", reader_mode)
+        return reader.load()
 
     def drain_changes(
         self,
@@ -4190,9 +4176,9 @@ class LakeTable:
         if self._lineage_shadowed():
             return False
         return all(
-            s.files is not None
-            and all(f.get("first_row_id") is not None for f in s.files)
+            f.get("first_row_id") is not None
             for s in self._live_state(self.snapshots)[0]
+            for f in s.files
         )
 
     def lineage_df(
@@ -4255,12 +4241,6 @@ class LakeTable:
             as_of_snapshot = self.resolve_ref(as_of_snapshot)
             snaps = self._segment_ending_at(as_of_snapshot)
         for snap in self._live_state(snaps)[0]:
-            if snap.files is None:
-                raise TableFormatError(
-                    f"snapshot {snap.snapshot_id} carries no file "
-                    "manifest — row lineage needs commit-time "
-                    "assignments; re-append under this engine version"
-                )
             for f in snap.files:
                 if f.get("first_row_id") is None:
                     raise TableFormatError(
@@ -4395,15 +4375,8 @@ class LakeTable:
             return None
         maxes: list[Any] = []
         for s in self.snapshots:
-            if s.is_row_delete:
-                continue
-            if s.files is None:
-                if not s.data_dir:
-                    continue
-                return None  # pre-manifest metadata: no commit stats
             for f in s.files:
-                st = f.get("stats") or {}
-                bounds = st.get(column)
+                bounds = (f.get("stats") or {}).get(column)
                 if bounds is None:
                     return None  # an unaccounted file could hide top rows
                 maxes.append(bounds[1])
@@ -4414,53 +4387,29 @@ class LakeTable:
 
     def files_df(self, spark: SparkSession) -> DataFrame:
         """The live data-file inventory (Iceberg's ``db.tbl.files``):
-        one row per parquet file with its owning snapshot, byte size,
-        and footer row count. Served from the commit-time manifests
-        stored in snapshot metadata (``Snapshot.files``) — a pure
-        metadata read, NO data-plane listing and NO footer re-reads,
-        exactly how Iceberg answers ``db.tbl.files`` from its Avro
-        manifests; works unchanged on a store-backed lake. Snapshots
-        from pre-manifest metadata fall back to a driver-side listing
-        + footer pass (the old behavior, local data plane only).
+        one row per parquet file with the snapshot that wrote it, byte
+        size, and footer row count. Served from the commit-time
+        manifests stored in snapshot metadata (``Snapshot.files``) — a
+        pure metadata read, NO data-plane listing and NO footer
+        re-reads, exactly how Iceberg answers ``db.tbl.files`` from its
+        Avro manifests; works unchanged on a store-backed lake. A
+        manifest fold (``rewrite_manifests``) reports its source
+        snapshots, so the fold changes no row.
         ``lower_bounds``/``upper_bounds`` mirror Iceberg's files-table
         columns (stringified per-column min/max from the commit-time
         stats; null where no stats were recorded)."""
         rows = []
-        for s in self.snapshots:
-            if s.is_row_delete:  # delete snapshot: no live data files
-                continue
-            if not s.data_dir and s.files is None:
-                continue  # empty-table edge (no dir, no manifest)
-            if s.files is not None:
-                for f in s.files:
-                    st = f.get("stats")
-                    rows.append(
-                        (
-                            f["path"],
-                            s.snapshot_id,
-                            f["size_bytes"],
-                            f["record_count"],
-                            {c: str(b[0]) for c, b in st.items()}
-                            if st
-                            else None,
-                            {c: str(b[1]) for c, b in st.items()}
-                            if st
-                            else None,
-                        )
-                    )
-                continue
-            import pyarrow.parquet as pq  # noqa: PLC0415
-
-            root = self.location / s.data_dir
-            for p in sorted(root.rglob("*.parquet")):
+        for s in self._live_state(self.snapshots)[0]:
+            for f in s.files:
+                st = f.get("stats")
                 rows.append(
                     (
-                        str(p.relative_to(self.location)),
+                        f["path"],
                         s.snapshot_id,
-                        p.stat().st_size,
-                        pq.read_metadata(p).num_rows,
-                        None,
-                        None,
+                        f["size_bytes"],
+                        f["record_count"],
+                        {c: str(b[0]) for c, b in st.items()} if st else None,
+                        {c: str(b[1]) for c, b in st.items()} if st else None,
                     )
                 )
         return spark.createDataFrame(
@@ -4503,40 +4452,19 @@ class LakeTable:
         file paths, a pure metadata read like ``files_df`` (the
         O(metadata) answer to 'which partitions are hot / skewed /
         full of small files' that drives compaction targeting at
-        100 TB). Unpartitioned snapshots aggregate under an empty
-        partition map."""
-        import pyarrow.parquet as pq  # noqa: PLC0415
-
+        100 TB). Each file counts under the spec of the snapshot that
+        wrote it, also across a manifest fold. Unpartitioned snapshots
+        aggregate under an empty partition map."""
         agg: dict[tuple, list] = {}
-        for s in self.snapshots:
-            if s.is_row_delete:  # delete snapshot: no live data files
-                continue
-            if not s.data_dir and s.files is None:
-                continue  # empty-table edge (no dir, no manifest)
-            if s.files is not None:
-                entries = [
-                    (f["path"], f["size_bytes"], f["record_count"])
-                    for f in s.files
-                ]
-            else:  # pre-manifest metadata: data-plane fallback
-                root = self.location / s.data_dir
-                entries = [
-                    (
-                        str(p.relative_to(self.location)),
-                        p.stat().st_size,
-                        pq.read_metadata(p).num_rows,
-                    )
-                    for p in sorted(root.rglob("*.parquet"))
-                ]
-            for path, size, nrec in entries:
+        for s in self._live_state(self.snapshots)[0]:
+            for f in s.files:
                 # spec field names; null partition values report as
                 # null, not as the hive sentinel string
-                parts = tuple(_partition_values_from_path(path).items())
-                key = (parts, s.spec_id)
-                slot = agg.setdefault(key, [0, 0, 0])
+                parts = tuple(_partition_values_from_path(f["path"]).items())
+                slot = agg.setdefault((parts, s.spec_id), [0, 0, 0])
                 slot[0] += 1
-                slot[1] += nrec
-                slot[2] += size
+                slot[1] += f["record_count"]
+                slot[2] += f["size_bytes"]
         rows = [
             (dict(parts), spec_id, fc, rc, sb)
             for (parts, spec_id), (fc, rc, sb) in sorted(agg.items())
@@ -4586,16 +4514,8 @@ class LakeTable:
                     for c in d.delete_key_cols
                 ]
             )
-        # commit-time manifest when present (metadata-priced);
-        # data-plane stat fallback for pre-manifest metadata
-        if d.files is not None:
-            nbytes = sum(f["size_bytes"] for f in d.files)
-        else:
-            nbytes = sum(
-                p.stat().st_size
-                for r in d.dirs
-                for p in (self.location / r).rglob("*.parquet")
-            )
+        # sized from the commit-time manifest (metadata-priced)
+        nbytes = sum(f["size_bytes"] for f in d.files)
         if nbytes <= _BROADCAST_KEYFILE_MAX_BYTES:
             mask = F.broadcast(mask)
         if d.delete_pos_dir:
@@ -4728,7 +4648,7 @@ class LakeTable:
                 # lookups; at cluster scale this is the step that turns
                 # a 100 TB scan into its matching partitions' files.
                 keep_paths: list[str] | None = None
-                if pruning and s.files is not None:
+                if pruning:
 
                     def _keep(f: dict) -> bool:
                         for (col, op, lit) in pruning:
@@ -4806,7 +4726,7 @@ class LakeTable:
                 dspec = spec
                 if any(
                     f.get("layout") == "spark-bucket"
-                    for f in (s.files or [])
+                    for f in s.files
                 ):
                     dspec = PartitionSpec(
                         tuple(
@@ -4928,7 +4848,7 @@ class LakeTable:
         Spark bucket layout: single-bucket-field spec and EVERY data
         file carrying the Spark bucket-id name pattern."""
         sbf = self._spark_bucket_field()
-        if sbf is None or snap.files is None or not snap.files:
+        if sbf is None or not snap.files:
             return None
         spec = self.spec_at(snap.spec_id)
         if len(spec.fields) != 1 or spec.fields[0].name != sbf.name:

@@ -147,6 +147,40 @@ def test_rewrite_manifests_guards_and_recursion(spark, wh):
     assert df.filter(F.col("k") < 10).count() == 0
 
 
+def test_rewrite_manifests_keeps_metadata_tables(spark, wh):
+    """The files and partitions tables are fold-invariant on a
+    spec-evolved table: every file keeps the snapshot that wrote it
+    and the spec it was written under."""
+    from sample_iceberg_schema_evolution_pyiceberg_spark.partitioning import (
+        compile_partition_spec,
+    )
+
+    cat = LakeCatalog(wh)
+    spec0 = compile_partition_spec({"partitions": [{"column_name": "g"}]})
+    t = cat.create_table(
+        "d", "ms", _src(spark, 0, 1).schema, partition_spec=spec0
+    )
+    t.append(_src(spark, 0, 20))
+    t.commit_spec(
+        compile_partition_spec(
+            {"partitions": [{"column_name": "k"}]}, start_field_id=1001
+        )
+    )
+    t.append(_src(spark, 20, 23))
+
+    def _tables():
+        # full rows; str() because map columns collect as dicts
+        return [
+            sorted(str(r) for r in df.collect())
+            for df in (t.partitions_df(spark), t.files_df(spark))
+        ]
+
+    pre = _tables()
+    assert t.rewrite_manifests() is not None
+    assert _tables() == pre
+    assert {r["spec_id"] for r in t.partitions_df(spark).collect()} == {0, 1}
+
+
 @_FOLDS
 def test_rewrite_manifests_expire_keeps_source_dirs(spark, wh, folds):
     t = _appended_table(

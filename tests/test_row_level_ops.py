@@ -185,7 +185,7 @@ def test_merge_on_read_delete_guards(spark, table):
     with pytest.raises(RuntimeError, match="spark"):
         export_to_iceberg(table)
     with pytest.raises(TableFormatError, match="compact"):
-        table.stream_changes(spark, source="files")
+        table.stream_changes(spark)
     with pytest.raises(TableFormatError, match="non-append"):
         table.changes_between(spark, from_snapshot=s0.snapshot_id)
     # stacked predicates compose
@@ -520,7 +520,7 @@ def test_mor_merge_guards_and_maintenance(spark, table):
     with pytest.raises(RuntimeError, match="format_version=2"):
         export_to_iceberg(table, format_version=1)
     with pytest.raises(TableFormatError, match="compact"):
-        table.stream_changes(spark, source="files")
+        table.stream_changes(spark)
     with pytest.raises(TableFormatError, match="atomic pair|delete"):
         table.rollback_to_snapshot(del_snap.snapshot_id)
     with pytest.raises(TableFormatError, match="compact"):
