@@ -929,7 +929,7 @@ def export_to_iceberg(
             for sf, pf in zip(doc["fields"], spec.fields)
         ]
 
-    # the snapshot list IS the live set: _write/_replace_live collapse
+    # the snapshot list IS the live set: _commit_snapshots collapses
     # it to one entry on every overwrite/update/delete/merge, so no
     # mid-list overwrite can exist here. Each snapshot contributes one
     # manifest: data snapshots a status=added data manifest under the

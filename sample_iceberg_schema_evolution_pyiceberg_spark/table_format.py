@@ -74,11 +74,13 @@ metadata JSON.
 
 from __future__ import annotations
 
+import contextlib
+import copy
 import json
 import re
 import time
 import uuid
-from collections.abc import Iterator
+from collections.abc import Collection, Iterator
 from dataclasses import dataclass
 from pathlib import Path
 from typing import Any
@@ -210,6 +212,38 @@ class Snapshot:
 
 # -- on-disk <-> in-memory metadata translation (module docstring table) ----
 
+# (in-memory key, on-disk key) pairs, in on-disk order: ONE table
+# each direction of the translation reads, so no key can be carried one
+# way and dropped the other — a dropped manifest key (partition tuple,
+# layout, ``sorted_by``) silently changes pruning and bucket adoption
+# on every RELOADED handle while same-handle reads stay right.
+# Snapshot extension fields are written only when set (absent =
+# default keeps documents stable).
+_SNAPSHOT_EXT_KEYS = (
+    ("expired", "expired"),  # expire_snapshots tombstone
+    ("delete_predicate", "delete-predicate"),
+    ("delete_keys_dir", "delete-keys-dir"),
+    ("delete_key_cols", "delete-key-cols"),
+    ("delete_pos_dir", "delete-pos-dir"),
+    # rewrite_manifests provenance (spec analog: the manifest-list the
+    # rewritten manifests came from)
+    ("source_snapshots", "source-snapshots"),
+)
+# per-file manifest keys (the spec keeps these in Avro manifests; this
+# format inlines them in the snapshot entry), written when not None
+_MANIFEST_KEYS = (
+    ("path", "path"),
+    ("size_bytes", "size-bytes"),
+    ("record_count", "record-count"),
+    ("stats", "stats"),
+    ("partition", "partition"),
+    ("layout", "layout"),
+    ("spark_bucket", "spark-bucket"),
+    ("first_row_id", "first-row-id"),  # v3 row lineage (a42)
+    ("sorted_by", "sorted-by"),
+)
+
+
 def _snap_to_spec(d: dict[str, Any]) -> dict[str, Any]:
     out = {
         "snapshot-id": d["snapshot_id"],
@@ -220,59 +254,15 @@ def _snap_to_spec(d: dict[str, Any]) -> dict[str, Any]:
         "partition-spec-id": d["spec_id"],
         "data-dir": d["data_dir"],
     }
-    if d.get("expired"):
-        out["expired"] = True  # ext field; absent = live (stable docs)
-    if d.get("delete_predicate"):
-        out["delete-predicate"] = d["delete_predicate"]  # ext field
-    if d.get("delete_keys_dir"):
-        out["delete-keys-dir"] = d["delete_keys_dir"]  # ext field
-        out["delete-key-cols"] = d["delete_key_cols"]
-    if d.get("delete_pos_dir"):
-        out["delete-pos-dir"] = d["delete_pos_dir"]  # ext field
-    if d.get("source_snapshots"):
-        # ext field — rewrite_manifests provenance (spec analog: the
-        # manifest-list the rewritten manifests came from)
-        out["source-snapshots"] = d["source_snapshots"]
+    out.update(
+        (disk, d[mem]) for mem, disk in _SNAPSHOT_EXT_KEYS if d.get(mem)
+    )
     if d.get("files") is not None:
-        # ext field — the spec keeps per-file stats in Avro manifests;
-        # this format inlines them in the snapshot entry
         out["manifest"] = [
             {
-                "path": f["path"],
-                "size-bytes": f["size_bytes"],
-                "record-count": f["record_count"],
-                **(
-                    {"stats": f["stats"]}
-                    if f.get("stats") is not None
-                    else {}
-                ),
-                # Iceberg manifests store each data file's partition
-                # tuple; losing it on the JSON round-trip silently
-                # disabled manifest partition pruning and bucket-layout
-                # adoption on every RELOADED handle (found live: the
-                # lake-bucketed join exchanged after a cross-session
-                # reload while the in-handle gate episode didn't)
-                **(
-                    {"partition": f["partition"]}
-                    if f.get("partition") is not None
-                    else {}
-                ),
-                **(
-                    {"layout": f["layout"]}
-                    if f.get("layout") is not None
-                    else {}
-                ),
-                **(
-                    {"spark-bucket": f["spark_bucket"]}
-                    if f.get("spark_bucket") is not None
-                    else {}
-                ),
-                # v3 row lineage (a42): the id of this file's first row
-                **(
-                    {"first-row-id": f["first_row_id"]}
-                    if f.get("first_row_id") is not None
-                    else {}
-                ),
+                disk: f[mem]
+                for mem, disk in _MANIFEST_KEYS
+                if f.get(mem) is not None
             }
             for f in d["files"]
         ]
@@ -289,48 +279,15 @@ def _snap_from_spec(d: dict[str, Any]) -> dict[str, Any]:
         "spec_id": d["partition-spec-id"],
         "data_dir": d["data-dir"],
     }
-    if d.get("expired"):
-        out["expired"] = True
-    if d.get("delete-predicate"):
-        out["delete_predicate"] = d["delete-predicate"]
-    if d.get("delete-keys-dir"):
-        out["delete_keys_dir"] = d["delete-keys-dir"]
-        out["delete_key_cols"] = d["delete-key-cols"]
-    if d.get("delete-pos-dir"):
-        out["delete_pos_dir"] = d["delete-pos-dir"]
-    if d.get("source-snapshots"):
-        out["source_snapshots"] = d["source-snapshots"]
+    out.update(
+        (mem, d[disk]) for mem, disk in _SNAPSHOT_EXT_KEYS if d.get(disk)
+    )
     if d.get("manifest") is not None:
         out["files"] = [
             {
-                "path": f["path"],
-                "size_bytes": f["size-bytes"],
-                "record_count": f["record-count"],
-                **(
-                    {"first_row_id": f["first-row-id"]}
-                    if f.get("first-row-id") is not None
-                    else {}
-                ),
-                **(
-                    {"stats": f["stats"]}
-                    if f.get("stats") is not None
-                    else {}
-                ),
-                **(
-                    {"partition": f["partition"]}
-                    if f.get("partition") is not None
-                    else {}
-                ),
-                **(
-                    {"layout": f["layout"]}
-                    if f.get("layout") is not None
-                    else {}
-                ),
-                **(
-                    {"spark_bucket": f["spark-bucket"]}
-                    if f.get("spark-bucket") is not None
-                    else {}
-                ),
+                mem: f[disk]
+                for mem, disk in _MANIFEST_KEYS
+                if f.get(disk) is not None
             }
             for f in d["manifest"]
         ]
@@ -1656,9 +1613,10 @@ class LakeTable:
                     "compact() first to fold them into data"
                 )
         v = int(self.meta["current_schema_version"]) + 1
-        self.meta["schemas"][str(v)] = json.loads(new_schema.json())
-        self.meta["current_schema_version"] = v
-        self._commit()
+        with self._reverting("schemas", "current_schema_version"):
+            self.meta["schemas"][str(v)] = json.loads(new_schema.json())
+            self.meta["current_schema_version"] = v
+            self._commit()
         return v
 
     def rename_column(self, old: str, new: str) -> int:
@@ -1714,14 +1672,15 @@ class LakeTable:
         )
         # the log entry and the schema land in ONE commit:
         # commit_schema persists the whole metadata document
-        self.meta.setdefault("renames", []).append(
-            {
-                "version": int(self.meta["current_schema_version"]) + 1,
-                "from": old,
-                "to": new,
-            }
-        )
-        return self.commit_schema(new_schema)
+        with self._reverting("renames"):
+            self.meta.setdefault("renames", []).append(
+                {
+                    "version": int(self.meta["current_schema_version"]) + 1,
+                    "from": old,
+                    "to": new,
+                }
+            )
+            return self.commit_schema(new_schema)
 
     def _renames_since(self, schema_version: int) -> dict[str, str]:
         """Composed {name-as-written -> current name} for data files
@@ -1769,9 +1728,10 @@ class LakeTable:
 
     def commit_spec(self, new_spec: PartitionSpec) -> int:
         sid = int(self.meta["current_spec_id"]) + 1
-        self.meta["specs"][str(sid)] = new_spec.to_json()
-        self.meta["current_spec_id"] = sid
-        self._commit()
+        with self._reverting("specs", "current_spec_id"):
+            self.meta["specs"][str(sid)] = new_spec.to_json()
+            self.meta["current_spec_id"] = sid
+            self._commit()
         return sid
 
     # -- write path --------------------------------------------------------
@@ -2322,61 +2282,145 @@ class LakeTable:
         rel = self._write_files(
             df, presorted=presorted, lineage_cols=lineage_materialized
         )
-        snap_id = rel.rsplit("snap-", 1)[1]
-        seq = int(self.meta.get("last_sequence_number", 0)) + 1
-        self.meta["last_sequence_number"] = seq
         manifest = self._collect_manifest(rel)
         self._warn_dual_layout_file_product(manifest)
-        if branch is None and (
-            operation in ("append", "overwrite") or lineage_materialized
-        ):
-            # v3 row lineage (a42): plain appends consume the table's
-            # row-id space — each data file records the id of its
-            # first row, ids continue positionally within the file.
-            # Rewrite commits that MATERIALIZED lineage (a43/a45: the
-            # rewrite wrote each surviving row's _row_id /
-            # _last_updated_sequence_number as physical columns) also
-            # consume a fresh block — the spec's inheritance base for
-            # any null-_row_id slots (empty for a pure compaction;
-            # merge inserts use it; readers coalesce materialized over
-            # positional). OVERWRITE assigns a fresh block too (r16):
-            # its rows are new content with no prior identity, exactly
-            # the spec's added-files assignment — so lineage stays
-            # servable across every commit this engine writes. Only a
-            # non-carrying "replace" (compact of a pre-lineage
-            # history) stays unassigned — fresh ids there would claim
-            # identity for rows that HAVE one, just unrecorded.
-            # Branch appends stage unassigned and receive their block
-            # at fast_forward (publish order is what decides it).
-            self._assign_row_ids(manifest)
-        snap = Snapshot(
-            snapshot_id=snap_id,
-            timestamp_ms=int(time.time() * 1000),
-            operation=operation,
-            schema_version=int(self.meta["current_schema_version"]),
-            spec_id=int(self.meta["current_spec_id"]),
-            data_dir=rel,
-            sequence_number=seq,
-            files=manifest,
+        # rewrite commit (overwrite / replace / delete / update / merge):
+        # the old live set moves to history — time travel keeps working
+        # across every rewrite flavor, and committing under the FINAL
+        # label means no crash window can leave a rewrite durably
+        # mislabeled 'overwrite' (the changelog's
+        # emit-nothing-by-'replace'-label optimization depends on the
+        # label surviving)
+        replaces = (
+            []
+            if operation == "append"
+            else [s["snapshot_id"] for s in self.meta["snapshots"]]
         )
-        if branch is not None:
-            self._branch(branch)["snapshots"].append(snap.to_json())
-        elif operation != "append":
-            # rewrite commit (overwrite / replace / delete / update /
-            # merge): old live set moves to history — time travel keeps
-            # working across every rewrite flavor, and committing under
-            # the FINAL label means no crash window can leave a rewrite
-            # durably mislabeled 'overwrite' (the changelog's
-            # emit-nothing-by-'replace'-label optimization depends on
-            # the label surviving)
-            self.meta.setdefault("snapshot_history", []).extend(
-                self.meta["snapshots"]
-            )
-            self.meta["snapshots"] = [snap.to_json()]
-        else:
-            self.meta["snapshots"].append(snap.to_json())
-        self._commit()
-        return snap
+        return self._commit_snapshots(
+            [{"operation": operation, "data_dir": rel, "files": manifest}],
+            replaces,
+            branch=branch,
+            lineage_materialized=lineage_materialized,
+        )[0]
+
+    @contextlib.contextmanager
+    def _reverting(self, *keys: str) -> Iterator[None]:
+        """Put the named top-level metadata values back if the block
+        raises: a failed commit leaves the handle as it was, so a retry
+        (or the next unrelated commit) cannot publish the failed
+        attempt's state. Saves a shallow copy of each value, never the
+        whole document — nested values the block changes must be
+        replaced, not mutated in place."""
+        saved = {k: copy.copy(self.meta[k]) for k in keys if k in self.meta}
+        try:
+            yield
+        except BaseException:
+            for k in keys:
+                if k in saved:
+                    self.meta[k] = saved[k]
+                else:
+                    self.meta.pop(k, None)
+            raise
+
+    def _commit_snapshots(
+        self,
+        entries: list[dict[str, Any]],
+        replaces: "Collection[str]" = (),
+        branch: "str | None" = None,
+        lineage_materialized: bool = False,
+    ) -> list[Snapshot]:
+        """THE commit of written files as snapshot entries; every
+        data-plane op ends here after its IO. ``entries`` carry each
+        new entry's payload only: ``operation`` plus ``data_dir`` and
+        ``files``, a delete payload, or ``source_snapshots``.
+        ``replaces`` names the live entries the new ones supersede
+        (none, all, or a subset); they move to history in live order.
+        ``branch`` appends to a staging branch instead of main.
+
+        Each entry is stamped here: its id is the ``snap-`` suffix of
+        its data dir (else fresh), all share one timestamp, they take
+        consecutive sequence numbers and the current schema and spec.
+        Multi-entry commits (a mask plus its re-append) land in ONE
+        metadata commit, so no reader can observe the torn state. On
+        any failure every metadata value this changed is put back
+        before the error propagates; the written files become orphans
+        remove_orphan_files reaps."""
+        now = int(time.time() * 1000)
+        seq = int(self.meta.get("last_sequence_number", 0))
+        with self._reverting(
+            "last_sequence_number",
+            "next_row_id",
+            "snapshots",
+            "snapshot_history",
+            "branches",
+        ):
+            snaps = []
+            for e in entries:
+                e = {"data_dir": "", **e}
+                if branch is None and (
+                    e["operation"] in ("append", "overwrite")
+                    or lineage_materialized
+                ):
+                    # v3 row lineage (a42): plain appends consume the
+                    # table's row-id space — each data file records the
+                    # id of its first row, ids continue positionally
+                    # within the file. Rewrite commits that
+                    # MATERIALIZED lineage (a43/a45: the rewrite wrote
+                    # each surviving row's _row_id /
+                    # _last_updated_sequence_number as physical
+                    # columns) also consume a fresh block — the spec's
+                    # inheritance base for any null-_row_id slots
+                    # (empty for a pure compaction; merge inserts use
+                    # it; readers coalesce materialized over
+                    # positional). OVERWRITE assigns a fresh block too
+                    # (r16): its rows are new content with no prior
+                    # identity, exactly the spec's added-files
+                    # assignment — so lineage stays servable across
+                    # every commit this engine writes. Only a
+                    # non-carrying "replace" (compact of a pre-lineage
+                    # history, a manifest fold) stays unassigned —
+                    # fresh ids there would claim identity for rows
+                    # that HAVE one, just unrecorded. Branch appends
+                    # stage unassigned and receive their block at
+                    # fast_forward (publish order is what decides it).
+                    self._assign_row_ids(e["files"])
+                seq += 1
+                snaps.append(
+                    Snapshot(
+                        snapshot_id=(
+                            e["data_dir"].rsplit("snap-", 1)[1]
+                            if "snap-" in e["data_dir"]
+                            else uuid.uuid4().hex[:16]
+                        ),
+                        timestamp_ms=now,
+                        schema_version=int(
+                            self.meta["current_schema_version"]
+                        ),
+                        spec_id=int(self.meta["current_spec_id"]),
+                        sequence_number=seq,
+                        **e,
+                    )
+                )
+            self.meta["last_sequence_number"] = seq
+            new = [s.to_json() for s in snaps]
+            if branch is not None:
+                br = self._branch(branch)
+                self.meta["branches"][branch] = {
+                    **br,
+                    "snapshots": [*br["snapshots"], *new],
+                }
+            else:
+                live = self.meta["snapshots"]
+                if replaces:
+                    self.meta.setdefault("snapshot_history", []).extend(
+                        s for s in live if s["snapshot_id"] in replaces
+                    )
+                self.meta["snapshots"] = [
+                    *(s for s in live if s["snapshot_id"] not in replaces),
+                    *new,
+                ]
+            self._commit()
+        return snaps
 
     # -- branches (Iceberg branch refs; write-audit-publish) ---------------
 
@@ -2434,19 +2478,25 @@ class LakeTable:
         # assignments (main's cursor position at publish time is what
         # decides them — two branches staging concurrently must not
         # both consume the same block). Assign here, in publish order,
-        # exactly as a direct append would have.
-        cursor = int(self.meta.get("next_row_id", 0))
-        for snap_json in br["snapshots"][len(main_ids):]:
-            if snap_json.get("operation") != "append":
-                continue
-            for f in snap_json["files"]:
-                if f.get("first_row_id") is None:
-                    f["first_row_id"] = cursor
-                    cursor += int(f["record_count"])
-        self.meta["next_row_id"] = cursor
-        self.meta["snapshots"] = br["snapshots"]
-        del self.meta["branches"][name]
-        self._commit()
+        # exactly as a direct append would have. The published entries
+        # are copies, so a failed commit leaves the branch unassigned.
+        new = [
+            {**s, "files": [dict(f) for f in s["files"]]}
+            for s in br["snapshots"][len(main_ids):]
+        ]
+        with self._reverting("next_row_id", "snapshots", "branches"):
+            self._assign_row_ids(
+                [
+                    f
+                    for s in new
+                    if s["operation"] == "append"
+                    for f in s["files"]
+                    if f.get("first_row_id") is None
+                ]
+            )
+            self.meta["snapshots"] = [*self.meta["snapshots"], *new]
+            del self.meta["branches"][name]
+            self._commit()
         return published
 
     def _warn_dual_layout_file_product(
@@ -2521,21 +2571,6 @@ class LakeTable:
             f"NOT ({self._null_safe(condition)})"
         ).schema  # noqa: B018
 
-    def _predicate_snapshot(
-        self, condition: str, sequence_number: int, timestamp_ms: int
-    ) -> Snapshot:
-        return Snapshot(
-            snapshot_id=uuid.uuid4().hex[:16],
-            timestamp_ms=timestamp_ms,
-            operation="delete",
-            schema_version=int(self.meta["current_schema_version"]),
-            spec_id=int(self.meta["current_spec_id"]),
-            data_dir="",
-            sequence_number=sequence_number,
-            # stored null-safe: scans apply NOT(pred) verbatim
-            delete_predicate=self._null_safe(condition),
-        )
-
     # -- row-level operations (copy-on-write) ------------------------------
 
     def delete_where(
@@ -2580,73 +2615,35 @@ class LakeTable:
                 .sort("file_path", "pos")
                 .coalesce(1)
             )
-            import copy  # noqa: PLC0415
-
-            backup = copy.deepcopy(self.meta)
-            try:
-                pos_rel = f"data/pos-{uuid.uuid4().hex[:16]}"
-                matched.write.mode("error").parquet(
-                    str(self.location / pos_rel)
-                )
-                manifest = self._collect_manifest(pos_rel)
-                if self._manifest_rows(manifest) == 0:
-                    self.data_io.delete_recursive(
-                        str(self.location / pos_rel)
-                    )
-                    return None
-                seq = int(self.meta.get("last_sequence_number", 0)) + 1
-                self.meta["last_sequence_number"] = seq
-                snap = Snapshot(
-                    snapshot_id=uuid.uuid4().hex[:16],
-                    timestamp_ms=int(time.time() * 1000),
-                    operation="delete",
-                    schema_version=int(
-                        self.meta["current_schema_version"]
-                    ),
-                    spec_id=int(self.meta["current_spec_id"]),
-                    data_dir="",
-                    sequence_number=seq,
-                    delete_pos_dir=pos_rel,
-                    files=manifest,
-                )
-                self.meta["snapshots"].append(snap.to_json())
-                self._commit()
-                return snap
-            except Exception:
-                # in-memory meta must never run ahead of disk; the
-                # written dir becomes an orphan remove_orphan_files
-                # reaps (same guard as the other MoR paths)
-                self.meta = backup
-                raise
+            pos_rel = f"data/pos-{uuid.uuid4().hex[:16]}"
+            matched.write.mode("error").parquet(str(self.location / pos_rel))
+            manifest = self._collect_manifest(pos_rel)
+            if self._manifest_rows(manifest) == 0:
+                self.data_io.delete_recursive(str(self.location / pos_rel))
+                return None
+            return self._commit_snapshots(
+                [
+                    {
+                        "operation": "delete",
+                        "delete_pos_dir": pos_rel,
+                        "files": manifest,
+                    }
+                ]
+            )[0]
         if strategy == "merge_on_read":
             self._validate_predicate(spark, condition)
-            import copy  # noqa: PLC0415
-
-            backup = copy.deepcopy(self.meta)
-            try:
-                seq = int(self.meta.get("last_sequence_number", 0)) + 1
-                self.meta["last_sequence_number"] = seq
-                snap = self._predicate_snapshot(
-                    condition, seq, int(time.time() * 1000)
-                )
-                self.meta["snapshots"].append(snap.to_json())
-                self._commit()
-                return snap
-            except Exception:
-                # a failed _commit must not leave in-memory meta ahead
-                # of disk (a retry would double-bump the sequence) —
-                # same guard as update_where's merge-on-read branch
-                self.meta = backup
-                raise
+            # stored null-safe: scans apply NOT(pred) verbatim
+            pred = self._null_safe(condition)
+            return self._commit_snapshots(
+                [{"operation": "delete", "delete_predicate": pred}]
+            )[0]
         if strategy != "copy_on_write":
             raise TableFormatError(f"unknown delete strategy {strategy!r}")
         # a45: survivors carry their row lineage through the rewrite
         # (a DELETE does not update them, so sequence numbers hold)
         src, carry = self._lineage_source(spark)
         kept = src.filter(f"NOT ({self._null_safe(condition)})")
-        return self._replace_live(
-            spark, kept, "delete", lineage_materialized=carry
-        )
+        return self._write(kept, "delete", lineage_materialized=carry)
 
     def update_where(
         self,
@@ -2690,9 +2687,6 @@ class LakeTable:
                 .filter(self._null_safe(condition))
                 .persist()  # delta-sized; feeds both commits below
             )
-            import copy  # noqa: PLC0415
-
-            backup = copy.deepcopy(self.meta)
             try:
                 pos_rel = f"data/pos-{uuid.uuid4().hex[:16]}"
                 (
@@ -2722,48 +2716,24 @@ class LakeTable:
                     ]
                 )
                 rel = self._write_files(changed)
-                now = int(time.time() * 1000)
-                seq0 = int(self.meta.get("last_sequence_number", 0))
-                del_snap = Snapshot(
-                    snapshot_id=uuid.uuid4().hex[:16],
-                    timestamp_ms=now,
-                    operation="delete",
-                    schema_version=int(
-                        self.meta["current_schema_version"]
-                    ),
-                    spec_id=int(self.meta["current_spec_id"]),
-                    data_dir="",
-                    sequence_number=seq0 + 1,
-                    delete_pos_dir=pos_rel,
-                    files=pos_manifest,
-                )
-                app_manifest = self._collect_manifest(rel)
                 # r16: the re-appended post-update versions are ADDED
-                # files — they take a fresh id block (spec assignment;
-                # MoR updates give rewritten rows new ids, CoW is the
-                # id-preserving path)
-                self._assign_row_ids(app_manifest)
-                app_snap = Snapshot(
-                    snapshot_id=rel.rsplit("snap-", 1)[1],
-                    timestamp_ms=now,
-                    operation="append",
-                    schema_version=int(
-                        self.meta["current_schema_version"]
-                    ),
-                    spec_id=int(self.meta["current_spec_id"]),
-                    data_dir=rel,
-                    sequence_number=seq0 + 2,
-                    files=app_manifest,
-                )
-                self.meta["last_sequence_number"] = seq0 + 2
-                self.meta["snapshots"].extend(
-                    [del_snap.to_json(), app_snap.to_json()]
-                )
-                self._commit()
-                return app_snap
-            except Exception:
-                self.meta = backup
-                raise
+                # files — the 'append' takes a fresh id block (spec
+                # assignment; MoR updates give rewritten rows new ids,
+                # CoW is the id-preserving path)
+                return self._commit_snapshots(
+                    [
+                        {
+                            "operation": "delete",
+                            "delete_pos_dir": pos_rel,
+                            "files": pos_manifest,
+                        },
+                        {
+                            "operation": "append",
+                            "data_dir": rel,
+                            "files": self._collect_manifest(rel),
+                        },
+                    ]
+                )[-1]
             finally:
                 matched.unpersist()
         if strategy == "merge_on_read":
@@ -2776,56 +2746,30 @@ class LakeTable:
                     for f in self.schema.fields
                 ]
             )
+            rel = self._write_files(changed)
+            manifest = self._collect_manifest(rel)
+            if self._manifest_rows(manifest) == 0:
+                # no row matched: committing the pair anyway would
+                # permanently add one scan-time mask arm (and a
+                # snapshot-log entry) for a no-op. The check is free —
+                # decided from the just-written parquet footers, no
+                # extra Spark action.
+                self.data_io.delete_recursive(str(self.location / rel))
+                return None
             # the pair (predicate mask + post-update rows) shares ONE
             # timestamp and lands in ONE metadata commit, so timestamp
-            # travel can never observe the torn delete-only state; on
-            # any failure the whole in-memory meta reverts (files
-            # already written become reapable orphans)
-            import copy  # noqa: PLC0415
-
-            backup = copy.deepcopy(self.meta)
-            try:
-                rel = self._write_files(changed)
-                manifest = self._collect_manifest(rel)
-                if self._manifest_rows(manifest) == 0:
-                    # no row matched: committing the pair anyway would
-                    # permanently add one scan-time mask arm (and a
-                    # snapshot-log entry) for a no-op. The check is
-                    # free — decided from the just-written parquet
-                    # footers, no extra Spark action.
-                    self.data_io.delete_recursive(
-                        str(self.location / rel)
-                    )
-                    return None
-                now = int(time.time() * 1000)
-                seq0 = int(self.meta.get("last_sequence_number", 0))
-                del_snap = self._predicate_snapshot(
-                    condition, seq0 + 1, now
-                )
-                # r16: fresh id block for the re-appended versions
-                # (same rule as the position flavor above)
-                self._assign_row_ids(manifest)
-                app_snap = Snapshot(
-                    snapshot_id=rel.rsplit("snap-", 1)[1],
-                    timestamp_ms=now,
-                    operation="append",
-                    schema_version=int(
-                        self.meta["current_schema_version"]
-                    ),
-                    spec_id=int(self.meta["current_spec_id"]),
-                    data_dir=rel,
-                    sequence_number=seq0 + 2,
-                    files=manifest,
-                )
-                self.meta["last_sequence_number"] = seq0 + 2
-                self.meta["snapshots"].extend(
-                    [del_snap.to_json(), app_snap.to_json()]
-                )
-                self._commit()
-                return app_snap
-            except Exception:
-                self.meta = backup
-                raise
+            # travel can never observe the torn delete-only state
+            pred = self._null_safe(condition)
+            return self._commit_snapshots(
+                [
+                    {"operation": "delete", "delete_predicate": pred},
+                    {
+                        "operation": "append",
+                        "data_dir": rel,
+                        "files": manifest,
+                    },
+                ]
+            )[-1]
         if strategy != "copy_on_write":
             raise TableFormatError(f"unknown update strategy {strategy!r}")
         df, carry = self._lineage_source(spark)
@@ -2843,8 +2787,9 @@ class LakeTable:
         if carry:
             # a45: updated rows keep their _row_id and bump
             # _last_updated_sequence_number to THIS commit's sequence
-            # (peeked as last+1 — _write assigns the same value on the
-            # very next call of this single-threaded handle); untouched
+            # (peeked as last+1 — _commit_snapshots assigns the same
+            # value on the very next commit of this single-threaded
+            # handle); untouched
             # rows carry both through unchanged
             next_seq = int(self.meta.get("last_sequence_number", 0)) + 1
             sel += [
@@ -2853,9 +2798,8 @@ class LakeTable:
                 .otherwise(F.col("_last_updated_sequence_number"))
                 .alias("_last_updated_sequence_number"),
             ]
-        df = df.select(*sel)
-        return self._replace_live(
-            spark, df, "update", lineage_materialized=carry
+        return self._write(
+            df.select(*sel), "update", lineage_materialized=carry
         )
 
     def _check_assignment_targets(self, assignments: dict[str, str]) -> None:
@@ -3076,8 +3020,8 @@ class LakeTable:
                     .alias("_last_updated_sequence_number"),
                 )
             result = kept.unionByName(inserts_aligned)
-        return self._replace_live(
-            spark, result, "merge", lineage_materialized=carry_lineage
+        return self._write(
+            result, "merge", lineage_materialized=carry_lineage
         )
 
     def _merge_on_read(
@@ -3107,109 +3051,73 @@ class LakeTable:
         affected_keys = (
             joined.filter(drop | updated).select(*key_cols).distinct()
         )
-        import copy  # noqa: PLC0415
+        keys_rel = f"data/keys-{uuid.uuid4().hex[:16]}"
+        affected_keys.write.mode("error").parquet(
+            str(self.location / keys_rel)
+        )
+        keys_manifest = self._collect_manifest(keys_rel)
+        keys_df = spark.read.parquet(str(self.location / keys_rel))
+        if (
+            sum(f["size_bytes"] for f in keys_manifest)
+            <= _BROADCAST_KEYFILE_MAX_BYTES
+        ):
+            keys_df = F.broadcast(keys_df)
+        # every matched row sharing an affected key is re-appended
+        # (clause applied; unfired same-key duplicates pass through
+        # unchanged) — the key mask is key-granular and must not lose
+        # rows it masks
+        appended = (
+            joined.join(keys_df, key_cols, "left_semi")
+            .filter(~drop)
+            .select(*[col_expr[c].alias(c) for c in cols])
+        )
+        inserts_aligned = build_inserts()
+        if inserts_aligned is not None:
+            appended = appended.unionByName(inserts_aligned)
+        return self._commit_key_delete(
+            keys_rel, keys_manifest, key_cols, appended
+        )
 
-        backup = copy.deepcopy(self.meta)
-        try:
-            keys_rel = f"data/keys-{uuid.uuid4().hex[:16]}"
-            affected_keys.write.mode("error").parquet(
-                str(self.location / keys_rel)
+    def _commit_key_delete(
+        self,
+        keys_rel: str,
+        keys_manifest: list[dict[str, Any]],
+        key_cols: list[str],
+        appended: DataFrame,
+    ) -> Snapshot | None:
+        """Write ``appended`` and commit it with the written key file
+        ``keys_rel`` as one equality-delete + append pair — the commit
+        half of a merge-on-read MERGE and of a keyed
+        ``apply_changelog``. An empty half is dropped (an insert-only
+        MERGE needs no mask, a delete-only one no append); if both are
+        empty nothing commits and None returns: committing anyway
+        would permanently add one anti-join mask arm per earlier data
+        snapshot on every future scan, plus snapshot-log noise, for a
+        no-op. Decided from the just-written parquet footers — zero
+        extra Spark actions."""
+        rel = self._write_files(appended)
+        app_manifest = self._collect_manifest(rel)
+        entries = []
+        if self._manifest_rows(keys_manifest) > 0:
+            entries.append(
+                {
+                    "operation": "delete",
+                    "delete_keys_dir": keys_rel,
+                    "delete_key_cols": list(key_cols),
+                    "files": keys_manifest,
+                }
             )
-            keys_manifest = self._collect_manifest(keys_rel)
-            keys_df = spark.read.parquet(str(self.location / keys_rel))
-            if (
-                sum(f["size_bytes"] for f in keys_manifest)
-                <= _BROADCAST_KEYFILE_MAX_BYTES
-            ):
-                keys_df = F.broadcast(keys_df)
-            # every matched row sharing an affected key is re-appended
-            # (clause applied; unfired same-key duplicates pass through
-            # unchanged) — the key mask is key-granular and must not
-            # lose rows it masks
-            rewritten = (
-                joined.join(keys_df, key_cols, "left_semi")
-                .filter(~drop)
-                .select(*[col_expr[c].alias(c) for c in cols])
+        else:
+            self.data_io.delete_recursive(str(self.location / keys_rel))
+        if self._manifest_rows(app_manifest) > 0:
+            # r16: re-appended versions/inserts are ADDED files — the
+            # 'append' takes a fresh id block (spec assignment)
+            entries.append(
+                {"operation": "append", "data_dir": rel, "files": app_manifest}
             )
-            appended = rewritten
-            inserts_aligned = build_inserts()
-            if inserts_aligned is not None:
-                appended = appended.unionByName(inserts_aligned)
-            rel = self._write_files(appended)
-            app_manifest = self._collect_manifest(rel)
-            n_keys = self._manifest_rows(keys_manifest)
-            n_app = self._manifest_rows(app_manifest)
-            if n_keys == 0 and n_app == 0:
-                # all-miss MERGE (no clause fired, nothing to insert):
-                # committing anyway would permanently add one anti-join
-                # mask arm per earlier data snapshot on every future
-                # scan, plus snapshot-log noise, for a no-op. Decided
-                # from the just-written parquet footers — zero extra
-                # Spark actions.
-                self.data_io.delete_recursive(
-                    str(self.location / keys_rel)
-                )
-                self.data_io.delete_recursive(str(self.location / rel))
-                return None
-            now = int(time.time() * 1000)
-            seq = int(self.meta.get("last_sequence_number", 0))
-            new_snaps: list[Snapshot] = []
-            if n_keys > 0:
-                seq += 1
-                new_snaps.append(
-                    Snapshot(
-                        snapshot_id=uuid.uuid4().hex[:16],
-                        timestamp_ms=now,
-                        operation="delete",
-                        schema_version=int(
-                            self.meta["current_schema_version"]
-                        ),
-                        spec_id=int(self.meta["current_spec_id"]),
-                        data_dir="",
-                        sequence_number=seq,
-                        delete_keys_dir=keys_rel,
-                        delete_key_cols=list(key_cols),
-                        files=keys_manifest,
-                    )
-                )
-            else:
-                # insert-only MERGE: no mask needed, plain append
-                self.data_io.delete_recursive(
-                    str(self.location / keys_rel)
-                )
-            if n_app > 0:
-                seq += 1
-                # r16: re-appended versions/inserts are ADDED files —
-                # fresh id block (spec assignment; the committed-only
-                # guard keeps next_row_id honest on dropped dirs)
-                self._assign_row_ids(app_manifest)
-                new_snaps.append(
-                    Snapshot(
-                        snapshot_id=rel.rsplit("snap-", 1)[1],
-                        timestamp_ms=now,
-                        operation="append",
-                        schema_version=int(
-                            self.meta["current_schema_version"]
-                        ),
-                        spec_id=int(self.meta["current_spec_id"]),
-                        data_dir=rel,
-                        sequence_number=seq,
-                        files=app_manifest,
-                    )
-                )
-            else:
-                # delete-only MERGE (all fired clauses were DELETEs)
-                self.data_io.delete_recursive(str(self.location / rel))
-            self.meta["last_sequence_number"] = seq
-            self.meta["snapshots"].extend(s.to_json() for s in new_snaps)
-            self._commit()
-            return new_snaps[-1]
-        except Exception:
-            # in-memory meta must never run ahead of disk (a retry
-            # would double-bump the sequence); written dirs become
-            # orphans remove_orphan_files reaps
-            self.meta = backup
-            raise
+        else:
+            self.data_io.delete_recursive(str(self.location / rel))
+        return self._commit_snapshots(entries)[-1] if entries else None
 
     def _lineage_source(
         self, spark: SparkSession
@@ -3224,28 +3132,6 @@ class LakeTable:
         if self._lineage_assignable():
             return self.lineage_df(spark), True
         return self.to_df(spark), False
-
-    def _replace_live(
-        self,
-        spark: SparkSession,
-        df: DataFrame,
-        operation: str,
-        lineage_materialized: bool = False,
-    ) -> Snapshot:
-        """Materialize a rewritten live set, then commit it as the one
-        live snapshot (old snapshots move to history for time travel).
-        The staging write IS the materialization — no driver round-trip.
-        One commit under the FINAL label (delete/update/merge/
-        overwrite): _write's rewrite branch handles any non-append
-        label identically, so no relabel window exists — a crash can
-        only leave the previous state or the fully-labeled rewrite."""
-        if operation == "append":
-            raise TableFormatError(
-                "_replace_live is for rewrite operations only"
-            )
-        return self._write(
-            df, operation, lineage_materialized=lineage_materialized
-        )  # moves old live to history
 
     # -- incremental reads -------------------------------------------------
 
@@ -3439,46 +3325,23 @@ class LakeTable:
         merged = spark.read.parquet(
             *[str(self.location / s.delete_pos_dir) for s in pos_snaps]
         ).dropDuplicates(["file_path", "pos"]).sort("file_path", "pos")
-        import copy  # noqa: PLC0415
-
-        backup = copy.deepcopy(self.meta)
-        try:
-            pos_rel = f"data/pos-{uuid.uuid4().hex[:16]}"
-            merged.coalesce(1).write.mode("error").parquet(
-                str(self.location / pos_rel)
-            )
-            manifest = self._collect_manifest(pos_rel)
-            seq = int(self.meta.get("last_sequence_number", 0)) + 1
-            self.meta["last_sequence_number"] = seq
-            snap = Snapshot(
-                snapshot_id=uuid.uuid4().hex[:16],
-                timestamp_ms=int(time.time() * 1000),
-                operation="delete",
-                schema_version=int(self.meta["current_schema_version"]),
-                spec_id=int(self.meta["current_spec_id"]),
-                data_dir="",
-                sequence_number=seq,
-                delete_pos_dir=pos_rel,
-                files=manifest,
-            )
-            # replaced entries move to history (time travel to a state
-            # BETWEEN the originals still applies them individually);
-            # the live log carries only the merged mask
-            merged_ids = {s.snapshot_id for s in pos_snaps}
-            self.meta.setdefault("snapshot_history", []).extend(
-                s for s in self.meta["snapshots"]
-                if s["snapshot_id"] in merged_ids
-            )
-            self.meta["snapshots"] = [
-                s for s in self.meta["snapshots"]
-                if s["snapshot_id"] not in merged_ids
-            ]
-            self.meta["snapshots"].append(snap.to_json())
-            self._commit()
-            return snap
-        except Exception:
-            self.meta = backup
-            raise
+        pos_rel = f"data/pos-{uuid.uuid4().hex[:16]}"
+        merged.coalesce(1).write.mode("error").parquet(
+            str(self.location / pos_rel)
+        )
+        # replaced entries move to history (time travel to a state
+        # BETWEEN the originals still applies them individually); the
+        # live log carries only the merged mask
+        return self._commit_snapshots(
+            [
+                {
+                    "operation": "delete",
+                    "delete_pos_dir": pos_rel,
+                    "files": self._collect_manifest(pos_rel),
+                }
+            ],
+            replaces={s.snapshot_id for s in pos_snaps},
+        )[0]
 
     def rewrite_manifests(self) -> "Snapshot | None":
         """Iceberg ``rewrite_manifests`` analog: fold the LIVE
@@ -3515,37 +3378,17 @@ class LakeTable:
             )
         if len(live) < 2:
             return None
-        union = [f for s in live for f in s.files]
-        import copy  # noqa: PLC0415
-
-        # same poisoned-handle guard as compact_position_deletes: a
-        # failed commit must not leave the in-memory handle carrying a
-        # phantom fold a retry (or the next unrelated commit) would
-        # publish on top of (r13 review finding)
-        backup = copy.deepcopy(self.meta)
-        try:
-            seq = int(self.meta.get("last_sequence_number", 0)) + 1
-            self.meta["last_sequence_number"] = seq
-            snap = Snapshot(
-                snapshot_id=uuid.uuid4().hex[:16],
-                timestamp_ms=int(time.time() * 1000),
-                operation="replace",
-                schema_version=int(self.meta["current_schema_version"]),
-                spec_id=int(self.meta["current_spec_id"]),
-                data_dir="",
-                sequence_number=seq,
-                files=union,
-                source_snapshots=[s.snapshot_id for s in live],
-            )
-            self.meta.setdefault("snapshot_history", []).extend(
-                self.meta["snapshots"]
-            )
-            self.meta["snapshots"] = [snap.to_json()]
-            self._commit()
-            return snap
-        except Exception:
-            self.meta = backup
-            raise
+        ids = [s.snapshot_id for s in live]
+        return self._commit_snapshots(
+            [
+                {
+                    "operation": "replace",
+                    "files": [f for s in live for f in s.files],
+                    "source_snapshots": ids,
+                }
+            ],
+            replaces=ids,
+        )[0]
 
     def add_files(self, source_dir: "str | Path") -> Snapshot:
         """Iceberg ``system.add_files`` analog: import EXISTING
@@ -3673,40 +3516,19 @@ class LakeTable:
         dst.mkdir(parents=True)
         for i, p in enumerate(files):
             shutil.copy2(p, dst / f"imported-{i:05d}-{p.name}")
-        import copy  # noqa: PLC0415
-
-        # poisoned-handle guard (same as compact_position_deletes): a
-        # failed commit must revert the in-memory snapshot append, or
-        # an add_files retry would publish the phantom AND the retry's
-        # copy — double-importing every row. The copied dir becomes an
-        # orphan remove_orphan_files reaps (r13 review finding).
-        backup = copy.deepcopy(self.meta)
-        try:
-            snap_id = rel.rsplit("snap-", 1)[1]
-            seq = int(self.meta.get("last_sequence_number", 0)) + 1
-            self.meta["last_sequence_number"] = seq
-            manifest = self._collect_manifest(rel)
-            # add_files IS an append of new rows: it consumes row-id
-            # space like any append (r15 review: forgetting this
-            # forfeited lineage for the whole table and blamed
-            # 'rewrite histories' for an import)
-            self._assign_row_ids(manifest)
-            snap = Snapshot(
-                snapshot_id=snap_id,
-                timestamp_ms=int(time.time() * 1000),
-                operation="append",
-                schema_version=int(self.meta["current_schema_version"]),
-                spec_id=int(self.meta["current_spec_id"]),
-                data_dir=rel,
-                sequence_number=seq,
-                files=manifest,
-            )
-            self.meta["snapshots"].append(snap.to_json())
-            self._commit()
-            return snap
-        except Exception:
-            self.meta = backup
-            raise
+        # add_files IS an append of new rows: the 'append' consumes
+        # row-id space like any append (r15 review: forgetting this
+        # forfeited lineage for the whole table and blamed 'rewrite
+        # histories' for an import)
+        return self._commit_snapshots(
+            [
+                {
+                    "operation": "append",
+                    "data_dir": rel,
+                    "files": self._collect_manifest(rel),
+                }
+            ]
+        )[0]
 
     # -- snapshot tags (Iceberg refs, tag type) ----------------------------
 
@@ -5286,7 +5108,7 @@ class LakeTable:
             # multiset fold: per-ordinal order is immaterial because
             # every delete image is present in its commit's pre-state
             new_live = self.to_df(spark).unionByName(ins).exceptAll(dels)
-            return self._replace_live(spark, new_live, "overwrite")
+            return self._write(new_live, "overwrite")
         bad_keys = [k for k in key_cols if k not in names]
         if bad_keys:
             raise TableFormatError(
@@ -5312,78 +5134,13 @@ class LakeTable:
             )
             .select(*names)
         )
-        import copy  # noqa: PLC0415
-
-        backup = copy.deepcopy(self.meta)
-        try:
-            keys_rel = f"data/keys-{uuid.uuid4().hex[:16]}"
-            dels.select(*key_cols).distinct().write.mode("error").parquet(
-                str(self.location / keys_rel)
-            )
-            keys_manifest = self._collect_manifest(keys_rel)
-            rel = self._write_files(ins_net)
-            app_manifest = self._collect_manifest(rel)
-            n_keys = self._manifest_rows(keys_manifest)
-            n_app = self._manifest_rows(app_manifest)
-            if n_keys == 0 and n_app == 0:
-                self.data_io.delete_recursive(str(self.location / keys_rel))
-                self.data_io.delete_recursive(str(self.location / rel))
-                return None
-            now = int(time.time() * 1000)
-            seq = int(self.meta.get("last_sequence_number", 0))
-            new_snaps: list[Snapshot] = []
-            if n_keys > 0:
-                seq += 1
-                new_snaps.append(
-                    Snapshot(
-                        snapshot_id=uuid.uuid4().hex[:16],
-                        timestamp_ms=now,
-                        operation="delete",
-                        schema_version=int(
-                            self.meta["current_schema_version"]
-                        ),
-                        spec_id=int(self.meta["current_spec_id"]),
-                        data_dir="",
-                        sequence_number=seq,
-                        delete_keys_dir=keys_rel,
-                        delete_key_cols=list(key_cols),
-                        files=keys_manifest,
-                    )
-                )
-            else:
-                self.data_io.delete_recursive(str(self.location / keys_rel))
-            if n_app > 0:
-                seq += 1
-                # r16: re-appended versions/inserts are ADDED files —
-                # fresh id block (spec assignment; the committed-only
-                # guard keeps next_row_id honest on dropped dirs)
-                self._assign_row_ids(app_manifest)
-                new_snaps.append(
-                    Snapshot(
-                        snapshot_id=rel.rsplit("snap-", 1)[1],
-                        timestamp_ms=now,
-                        operation="append",
-                        schema_version=int(
-                            self.meta["current_schema_version"]
-                        ),
-                        spec_id=int(self.meta["current_spec_id"]),
-                        data_dir=rel,
-                        sequence_number=seq,
-                        files=app_manifest,
-                    )
-                )
-            else:
-                self.data_io.delete_recursive(str(self.location / rel))
-            self.meta["last_sequence_number"] = seq
-            self.meta["snapshots"].extend(s.to_json() for s in new_snaps)
-            self._commit()
-            return new_snaps[-1]
-        except Exception:
-            # in-memory meta must never run ahead of disk (same guard
-            # as _merge_on_read); written dirs become orphans
-            # remove_orphan_files reaps
-            self.meta = backup
-            raise
+        keys_rel = f"data/keys-{uuid.uuid4().hex[:16]}"
+        dels.select(*key_cols).distinct().write.mode("error").parquet(
+            str(self.location / keys_rel)
+        )
+        return self._commit_key_delete(
+            keys_rel, self._collect_manifest(keys_rel), key_cols, ins_net
+        )
 
 
 def scd2_history(changelog: DataFrame, key_cols: list[str]) -> DataFrame:

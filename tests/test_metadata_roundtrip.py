@@ -48,6 +48,9 @@ FULL_SNAPSHOT = {
             "stats": {"k": [0, 99], "name": ["a", "z"]},
             "partition": {"k_bucket": 1, "day_col": "2024-01-02"},
             "layout": "spark-bucket",
+            "spark_bucket": 1,
+            "first_row_id": 40,
+            "sorted_by": ["k", "name"],
         },
         # minimal entry: optional per-file fields absent
         {

@@ -525,6 +525,39 @@ def test_bucket_sort_join_fingerprint_and_adoption_claim(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
+def test_reloaded_handle_keeps_bucket_sort_claim(spark, tmp_path):
+    """The manifest's per-file ``sorted_by`` claim survives the
+    metadata round-trip: a handle loaded before any scan adopts the
+    bucketed scan with SORTED BY (k, g), so a window partitioned by
+    the bucket key and ordered by the declared sort plans no Sort.
+    (The adoption table is named from location + snapshot id, so
+    whichever handle adopts first decides the plan for both.)"""
+    from pyspark.sql.window import Window
+
+    from sample_iceberg_schema_evolution_pyiceberg_spark.partitioning import (
+        compile_partition_spec,
+    )
+
+    df = spark.range(0, 2000).selectExpr("id as k", "id % 7 as g")
+    spec = compile_partition_spec(
+        {"partitions": [{"column_name": "k", "transform": "bucket[4]"}]}
+    )
+    t = LakeCatalog(str(tmp_path / "wh")).create_table(
+        "d", "w", df.schema, partition_spec=spec,
+        properties={"write.bucket-layout": "spark", "write.sort-order": "g"},
+    )
+    t.append(df)
+    reloaded = LakeTable.load(t.location)
+    w = Window.partitionBy("k").orderBy("g")
+    win = reloaded.to_df(spark).withColumn("rn", F.row_number().over(w))
+    plan = win._jdf.queryExecution().executedPlan().toString()
+    assert "Window" in plan and "Sort [" not in plan, plan
+    assert win.count() == 2000
+    assert {
+        tuple(f["sorted_by"]) for f in reloaded.snapshots[-1].files
+    } == {("k", "g")}
+
+
 def test_truncate_transform_sort_prunes_and_roundtrips(spark, tmp_path):
     """Transform sort fields (VERDICT r10 item 3): a truncate(4, s)-
     sorted table range-clusters the SOURCE column by prefix, so the
