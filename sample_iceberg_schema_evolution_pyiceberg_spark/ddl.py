@@ -1150,11 +1150,9 @@ class DdlFrontend:
             # Iceberg's own DDL verb for the declared sort order —
             # sugar over the write.sort-order property (one document:
             # SHOW CREATE round-trips it as TBLPROPERTIES)
-            table.meta["properties"]["write.sort-order"] = (
-                am.group(1).strip()
+            table.update_properties_validated(
+                updates={"write.sort-order": am.group(1).strip()}
             )
-            table.refresh_declared_sort_order()
-            table._commit()
             resp.message_list.append(
                 f"Set write order {am.group(1).strip()!r} on {db}.{tbl}"
             )
@@ -1163,9 +1161,7 @@ class DdlFrontend:
             action,
             re.IGNORECASE,
         ):
-            table.meta["properties"].pop("write.sort-order", None)
-            table.refresh_declared_sort_order()
-            table._commit()
+            table.update_properties_validated(removes=["write.sort-order"])
             resp.message_list.append(f"Cleared write order on {db}.{tbl}")
         elif am := re.match(
             r"^SET\s+TBLPROPERTIES\s*\((.+)\)\s*$",
@@ -1179,7 +1175,6 @@ class DdlFrontend:
             # the SAME commit, reverting the in-memory handle on
             # failure — see update_properties_validated
             table.update_properties_validated(updates=props)
-            table._commit()
             resp.message_list.append(
                 f"Set properties {sorted(props)} on {db}.{tbl}"
             )
@@ -1197,7 +1192,6 @@ class DdlFrontend:
             # document either way (same revert-on-failure surface as
             # SET — update_properties_validated)
             table.update_properties_validated(removes=keys)
-            table._commit()
             resp.message_list.append(
                 f"Unset properties {sorted(keys)} on {db}.{tbl}"
             )

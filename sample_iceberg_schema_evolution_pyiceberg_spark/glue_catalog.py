@@ -179,14 +179,14 @@ class GlueLakeCatalog:
                 f"table {database}.{table} already exists (glue)"
             )
         self.create_namespace_if_not_exists(database)
-        # unique_metadata_names: even the CREATE race cannot overwrite
-        # another writer's v1 object; Glue's own AlreadyExists check
-        # arbitrates which registration wins
-        # catalog-of-record marker (persisted in table metadata): plain
-        # LakeTable.load handles honor it by forcing unique metadata
-        # names and refusing commits without a publish hook, so a
-        # store-path writer cannot silently diverge the version hint
-        # from the Glue pointer (split-brain guard, ADVICE r7)
+        # catalog-of-record marker (persisted in table metadata): every
+        # handle, the CREATE one included, writes unique metadata names
+        # (even the CREATE race cannot overwrite another writer's v1
+        # object; Glue's own AlreadyExists check arbitrates which
+        # registration wins), and plain LakeTable.load handles refuse
+        # commits without a publish hook, so a store-path writer cannot
+        # silently diverge the version hint from the Glue pointer
+        # (split-brain guard, ADVICE r7)
         props = dict(properties or {})
         props.setdefault("catalog-of-record", "glue")
         # location: name-derived by default; when that dir is already
@@ -204,8 +204,7 @@ class GlueLakeCatalog:
                 / f"{table}-{_uuid.uuid4().hex[:8]}"
             )
         t = self._inner.create_table(
-            database, table, schema, partition_spec, props,
-            unique_metadata_names=True, location=loc,
+            database, table, schema, partition_spec, props, location=loc
         )
         meta_path = t.loaded_from
         try:
@@ -553,8 +552,8 @@ class GlueLakeCatalog:
                         raise
                 self._clear_rename_markers(new_database, new_table)
                 t = self.load_table(new_database, new_table)
-                t.meta["identifier"] = f"{new_database}.{new_table}"
-                t._commit()
+                with t._transaction():
+                    t.meta["identifier"] = f"{new_database}.{new_table}"
                 return t
             src_loc = (entry.get("StorageDescriptor") or {}).get(
                 "Location"
@@ -632,8 +631,8 @@ class GlueLakeCatalog:
                 raise
         self._clear_rename_markers(new_database, new_table)
         t = self.load_table(new_database, new_table)
-        t.meta["identifier"] = f"{new_database}.{new_table}"
-        t._commit()
+        with t._transaction():
+            t.meta["identifier"] = f"{new_database}.{new_table}"
         return t
 
     def list_tables(self) -> list[tuple[str, str]]:
@@ -656,7 +655,6 @@ class GlueLakeCatalog:
         if Glue still points there (optimistic lock). ``refresh()``
         resyncs ``loaded_from``, so refresh-and-retry genuinely works
         after a lost race."""
-        t.unique_metadata_names = True
 
         def publish(version: int, meta_path: str) -> None:
             entry = self._get_entry(database, table)

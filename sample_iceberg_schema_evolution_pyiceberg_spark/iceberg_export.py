@@ -101,71 +101,6 @@ _PRIMITIVES: dict[str, str] = {
 }
 
 
-class _IdGen:
-    def __init__(self) -> None:
-        self.last = 0
-
-    def next(self) -> int:
-        self.last += 1
-        return self.last
-
-
-def _iceberg_type(dt: T.DataType, ids: _IdGen) -> Any:
-    if isinstance(dt, T.DecimalType):
-        return f"decimal({dt.precision}, {dt.scale})"
-    if isinstance(dt, T.StructType):
-        return {
-            "type": "struct",
-            "fields": [_iceberg_field(f, ids) for f in dt.fields],
-        }
-    if isinstance(dt, T.ArrayType):
-        eid = ids.next()
-        return {
-            "type": "list",
-            "element-id": eid,
-            "element": _iceberg_type(dt.elementType, ids),
-            "element-required": not dt.containsNull,
-        }
-    if isinstance(dt, T.MapType):
-        kid, vid = ids.next(), ids.next()
-        return {
-            "type": "map",
-            "key-id": kid,
-            "key": _iceberg_type(dt.keyType, ids),
-            "value-id": vid,
-            "value": _iceberg_type(dt.valueType, ids),
-            "value-required": not dt.valueContainsNull,
-        }
-    name = dt.typeName()
-    if name in _PRIMITIVES:
-        return _PRIMITIVES[name]
-    raise ValueError(f"no Iceberg mapping for Spark type {dt.simpleString()}")
-
-
-def _iceberg_field(f: T.StructField, ids: _IdGen) -> dict[str, Any]:
-    fid = ids.next()
-    return {
-        "id": fid,
-        "name": f.name,
-        "required": not f.nullable,
-        "type": _iceberg_type(f.dataType, ids),
-    }
-
-
-def schema_to_iceberg(schema: T.StructType, schema_id: int = 0) -> dict[str, Any]:
-    """Assign fresh sequential field IDs (DFS pre-order — any unique
-    assignment is spec-valid; IDs are minted once at export and reused
-    for the partition spec's source-id references)."""
-    ids = _IdGen()
-    doc = {
-        "type": "struct",
-        "schema-id": schema_id,
-        "fields": [_iceberg_field(f, ids) for f in schema.fields],
-    }
-    doc["_last_column_id"] = ids.last  # stripped before writing
-    return doc
-
-
 class _StableIds:
     """Path-keyed ID registry: the same column path keeps the same
     field ID across every schema version (Iceberg's evolution
@@ -226,6 +161,28 @@ def _iceberg_field_stable(
         "name": f.name,
         "required": not f.nullable,
         "type": _iceberg_type_stable(f.dataType, path, ids),
+    }
+
+
+def schema_to_iceberg(
+    schema: T.StructType,
+    schema_id: int = 0,
+    ids: "_StableIds | None" = None,
+) -> dict[str, Any]:
+    """One schema version as an Iceberg struct. Field IDs come from
+    the path-keyed registry ``ids`` (fresh when None): paths it has
+    not seen are numbered in DFS pre-order, paths it has keep their
+    ID, so a registry shared across versions keeps IDs stable.
+    ``_last_column_id`` is the registry's high-water mark, for the
+    caller to strip before writing."""
+    ids = _StableIds() if ids is None else ids
+    return {
+        "type": "struct",
+        "schema-id": schema_id,
+        "fields": [
+            _iceberg_field_stable(f, f.name, ids) for f in schema.fields
+        ],
+        "_last_column_id": ids.last,
     }
 
 
@@ -296,20 +253,12 @@ def schema_history_to_iceberg(
     last-column-id and ``.for_path`` resolves partition source-ids for
     any column any version ever had)."""
     ids = _StableIds()
-    versions = sorted(int(v) for v in table.meta["schemas"])
-    docs = []
-    for v in versions:
-        schema = table.schema_at(v)
-        docs.append(
-            {
-                "type": "struct",
-                "schema-id": v,
-                "fields": [
-                    _iceberg_field_stable(f, f.name, ids)
-                    for f in schema.fields
-                ],
-            }
-        )
+    docs = [
+        schema_to_iceberg(table.schema_at(v), v, ids)
+        for v in sorted(int(v) for v in table.meta["schemas"])
+    ]
+    for doc in docs:
+        del doc["_last_column_id"]
     return docs, int(table.meta["current_schema_version"]), ids
 
 
@@ -1388,9 +1337,9 @@ _FROM_ICEBERG: dict[str, T.DataType] = {
 
 
 def iceberg_type_to_spark(t: Any) -> T.DataType:
-    """Inverse of _iceberg_type — lets the external reader project each
-    file by the *table* schema, the way Iceberg readers resolve files
-    written under older schema versions."""
+    """Inverse of _iceberg_type_stable — lets the external reader
+    project each file by the *table* schema, the way Iceberg readers
+    resolve files written under older schema versions."""
     if isinstance(t, str):
         if t.startswith("decimal"):
             p, s = t[t.index("(") + 1 : t.index(")")].split(",")

@@ -74,17 +74,13 @@ def _dir_input_bytes(sf_dir: str) -> int:
 # a 17 MB input runs 8 x 2 MB partitions), so coalescing has nothing
 # to merge and a skewed key cannot materialize. Any real input — a
 # cluster decade, 100 TB — keeps AQE on: skew-join splitting and
-# runtime coalescing are strictly worth it there. Override with
-# SPARK_GRAFT_AQE=true|false.
+# runtime coalescing are strictly worth it there.
 _AQE_MIN_INPUT_BYTES = 64 * 1024 * 1024
 
 
 def adaptive_enabled(input_bytes: int) -> bool:
     """Input-sized AQE gate: off below 64 MB declared input (see
     _AQE_MIN_INPUT_BYTES rationale), on for anything real."""
-    forced = os.environ.get("SPARK_GRAFT_AQE")
-    if forced:
-        return forced.lower() == "true"
     return input_bytes >= _AQE_MIN_INPUT_BYTES
 
 
@@ -177,13 +173,10 @@ def get_spark(
         # stages merge down to the data's size (measured -0.5 s across
         # the sf0.1 headline; the advisory mirrors the 2 MB
         # per-partition target of scaled_shuffle_partitions, and a
-        # cluster overrides it alongside SPARK_GRAFT_SHUFFLE_PARTITIONS
-        # — a too-small advisory only under-merges, never starves)
+        # cluster overrides it through extra_conf — a too-small
+        # advisory only under-merges, never starves)
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "2m"),
-        )
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")

@@ -282,7 +282,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # (one-time, ingest-shaped cost, like the split cache above), and the
 # returned catalog table carries the bucket spec Catalyst needs to
 # eliminate the Exchange on both sides. Falls back to the plain scan on
-# any failure; disable with SPARK_GRAFT_BUCKETED=0.
+# any failure.
 # ---------------------------------------------------------------------------
 
 _BUCKETS = 32  # parallelism cap; actual count sized by data below
@@ -299,8 +299,6 @@ def buckets_for(sf_dir: str) -> int:
     fresh instead of mixing bucket widths."""
     from ..session import _dir_input_bytes, scaled_shuffle_partitions
 
-    if env := os.environ.get("SPARK_GRAFT_BUCKETS"):
-        return int(env)
     nbytes = _dir_input_bytes(sf_dir)
     return (
         scaled_shuffle_partitions(nbytes, _BUCKETS) if nbytes else _BUCKETS
@@ -316,8 +314,6 @@ def bucketed_table(
     bucketed write aligns write tasks with bucket ids (same murmur3
     pmod), yielding one file per bucket so sort-merge join can also
     skip the per-partition sort (buckets are written sorted by key)."""
-    if os.environ.get("SPARK_GRAFT_BUCKETED", "1") == "0":
-        return load_table(spark, sf_dir, name)
     if buckets is None:
         buckets = buckets_for(sf_dir)
     base = load_table(spark, sf_dir, name)

@@ -1049,7 +1049,6 @@ class LakeCatalog:
         schema: T.StructType,
         partition_spec: PartitionSpec | None = None,
         properties: dict[str, str] | None = None,
-        unique_metadata_names: bool = False,
         location: "str | Path | None" = None,
     ) -> "LakeTable":
         """``location`` overrides the name-derived directory — the
@@ -1083,18 +1082,16 @@ class LakeCatalog:
             "snapshots": [],
         }
         t = LakeTable(loc, meta, io=self.io)
-        # CREATE-time sort-order declaration (write.sort-order): parse
-        # and validate against the schema before the v1 commit so a
-        # bad declaration fails the CREATE, not the first append
-        t.refresh_declared_sort_order()
-        # a catalog-of-record layer asks for writer-unique metadata
-        # names so even the CREATE race cannot overwrite objects
-        t.unique_metadata_names = unique_metadata_names
         # the v1 object is written BEFORE the catalog registration that
         # will point at it — no pointer exists to diverge from yet, so
         # the catalog-of-record commit guard does not apply to CREATE
         t.allow_uncataloged_commit = True
-        t._commit(version=1)
+        with t._transaction():
+            # CREATE-time sort-order declaration (write.sort-order):
+            # parse and validate against the schema before the v1
+            # commit so a bad declaration fails the CREATE, not the
+            # first append
+            t.refresh_declared_sort_order()
         t.allow_uncataloged_commit = False
         return t
 
@@ -1151,9 +1148,9 @@ class LakeCatalog:
         dst = self._table_dir(new_database, new_table)
         self.io.rename_dir(str(src), str(dst))
         t = LakeTable.load(dst, io=self.io)
-        t.meta["identifier"] = f"{new_database}.{new_table}"
-        t.meta["location"] = str(dst)
-        t._commit()
+        with t._transaction():
+            t.meta["identifier"] = f"{new_database}.{new_table}"
+            t.meta["location"] = str(dst)
         return t
 
     def list_tables(self) -> list[tuple[str, str]]:
@@ -1245,10 +1242,8 @@ class LakeTable:
         # publish/CAS the new metadata pointer after each commit. None
         # for plain hint-file tables.
         self.on_commit = None
-        # catalog-of-record mode: give every metadata file a
-        # writer-unique name so racing commits can never overwrite
-        # each other's objects (see _commit)
-        self.unique_metadata_names = False
+        # True inside the outermost _transaction block
+        self._txn_open = False
         # explicit opt-out of the catalog-of-record commit guard: a
         # caller who sets this True on a catalog-managed table commits
         # to the store lineage KNOWING the catalog pointer will not
@@ -1300,14 +1295,6 @@ class LakeTable:
             io=io,
         )
         t.loaded_from = meta_file
-        if t.properties.get("catalog-of-record"):
-            # catalog-managed table opened via the plain store path:
-            # never let it reuse deterministic v{N} object names (a
-            # racing catalog writer's uuid'd object must not be
-            # overwritable), and _commit refuses to advance the hint
-            # without a catalog publish hook (split-brain guard; see
-            # _commit)
-            t.unique_metadata_names = True
         return t
 
     def refresh(self) -> "LakeTable":
@@ -1320,7 +1307,47 @@ class LakeTable:
         self.loaded_from = fresh.loaded_from
         return self
 
-    def _commit(self, version: int | None = None) -> None:
+    @property
+    def unique_metadata_names(self) -> bool:
+        """Catalog-of-record mode: every metadata file gets a
+        writer-unique name so racing commits can never overwrite each
+        other's objects (see _commit). On for a handle with a publish
+        hook, and for any table carrying the ``catalog-of-record``
+        marker, so a handle opened through the plain store path never
+        reuses a deterministic v{N} name either."""
+        return self.on_commit is not None or bool(
+            self.properties.get("catalog-of-record")
+        )
+
+    @contextlib.contextmanager
+    def _transaction(self) -> Iterator[None]:
+        """THE way package code changes and publishes this handle's
+        metadata: the block mutates ``self.meta``, the exit commits it
+        once. On any failure, in the block or in the commit, the
+        document is put back exactly (keys the block added go too)
+        before the error propagates, so a retry or the next unrelated
+        commit cannot publish the failed attempt's state. A nested
+        block joins the outer one: only the outermost commits.
+
+        Saves a shallow copy of each top-level value, never the whole
+        document: a block must replace values two levels down (a
+        snapshot entry, a branch record), not mutate them in place."""
+        if self._txn_open:
+            yield
+            return
+        saved = {k: copy.copy(v) for k, v in self.meta.items()}
+        self._txn_open = True
+        try:
+            yield
+            self._commit()
+        except BaseException:
+            self.meta.clear()
+            self.meta.update(saved)
+            raise
+        finally:
+            self._txn_open = False
+
+    def _commit(self) -> None:
         if (
             self.on_commit is None
             and not self.allow_uncataloged_commit
@@ -1342,13 +1369,12 @@ class LakeTable:
                 "catalog, or set allow_uncataloged_commit=True)"
             )
         meta_dir = self.location / "_meta"
-        if version is None:
-            hint_file = str(meta_dir / "version-hint.text")
-            version = (
-                _hint_to_version(self.io.read_text(hint_file).strip()) + 1
-                if self.io.exists(hint_file)
-                else 1
-            )
+        hint_file = str(meta_dir / "version-hint.text")
+        version = (
+            _hint_to_version(self.io.read_text(hint_file).strip()) + 1
+            if self.io.exists(hint_file)
+            else 1
+        )
         if self.unique_metadata_names:
             # catalog-of-record mode: the metadata OBJECT key must be
             # unique per writer (Iceberg's uuid'd metadata file names).
@@ -1375,8 +1401,7 @@ class LakeTable:
         # via _hint_to_filename); the bare number otherwise (stable
         # format for plain tables)
         self.io.write_text(
-            str(meta_dir / "version-hint.text"),
-            fname if self.unique_metadata_names else str(version),
+            hint_file, fname if self.unique_metadata_names else str(version)
         )
         self.loaded_from = meta_path
 
@@ -1440,41 +1465,10 @@ class LakeTable:
                 # declaration-time check of the one REAL conflict: a
                 # DESC/nulls-last identity declaration on the bucket
                 # key itself (raises; see _bucket_secondary_fields) —
-                # callers (CREATE, SET/UNSET) revert on the raise
+                # callers' transactions (CREATE, SET/UNSET) revert it
                 self._bucket_secondary_fields(sbf)
         else:
             self.meta.pop("sort_order", None)
-
-    def _declaration_snapshot(
-        self,
-    ) -> tuple[dict, "list | None", "list | None"]:
-        """The (properties, sort_order, clustering) triple a failed
-        declaration change reverts to. One definition shared by every
-        revert site (SET/UNSET TBLPROPERTIES, compact) — r12 review:
-        three hand-rolled copies would silently diverge the moment
-        refresh_declared_sort_order mutates anything new. Covers
-        ``clustering`` too (ADVICE r12): a z-order compact mutates it
-        alongside the sort-order declaration, and a failed rewrite
-        must revert the whole layout claim, not half of it."""
-        return (
-            dict(self.meta["properties"]),
-            self.meta.get("sort_order"),
-            self.meta.get("clustering"),
-        )
-
-    def _restore_declaration(
-        self, prior: tuple[dict, "list | None", "list | None"]
-    ) -> None:
-        props, order, clustering = prior
-        self.meta["properties"] = props
-        if order is None:
-            self.meta.pop("sort_order", None)
-        else:
-            self.meta["sort_order"] = order
-        if clustering is None:
-            self.meta.pop("clustering", None)
-        else:
-            self.meta["clustering"] = clustering
 
     def update_properties_validated(
         self,
@@ -1482,22 +1476,18 @@ class LakeTable:
         removes: "tuple[str, ...] | list[str]" = (),
     ) -> None:
         """Apply a property mutation and re-validate the declared sort
-        order when a declaration-relevant key changed — atomically on
-        the IN-MEMORY handle: on validation failure both the
-        properties dict and the derived metadata revert, so nothing
-        mutates unless the whole change is valid. Does NOT commit (the
-        caller owns the commit boundary)."""
-        prior = self._declaration_snapshot()
-        self.meta["properties"].update(updates or {})
-        for k in removes:
-            self.meta["properties"].pop(k, None)
-        touched = set(updates or {}) | set(removes)
-        if {"write.sort-order", "write.bucket-layout"} & touched:
-            try:
+        order when a declaration-relevant key changed, as one commit:
+        on validation failure both the properties dict and the derived
+        metadata revert, so nothing changes unless the whole change is
+        valid. Inside a caller's ``_transaction`` it joins that
+        commit."""
+        with self._transaction():
+            self.meta["properties"].update(updates or {})
+            for k in removes:
+                self.meta["properties"].pop(k, None)
+            touched = set(updates or {}) | set(removes)
+            if {"write.sort-order", "write.bucket-layout"} & touched:
                 self.refresh_declared_sort_order()
-            except Exception:
-                self._restore_declaration(prior)
-                raise
 
     @property
     def partition_spec(self) -> PartitionSpec:
@@ -1613,10 +1603,9 @@ class LakeTable:
                     "compact() first to fold them into data"
                 )
         v = int(self.meta["current_schema_version"]) + 1
-        with self._reverting("schemas", "current_schema_version"):
+        with self._transaction():
             self.meta["schemas"][str(v)] = json.loads(new_schema.json())
             self.meta["current_schema_version"] = v
-            self._commit()
         return v
 
     def rename_column(self, old: str, new: str) -> int:
@@ -1671,8 +1660,8 @@ class LakeTable:
             ]
         )
         # the log entry and the schema land in ONE commit:
-        # commit_schema persists the whole metadata document
-        with self._reverting("renames"):
+        # commit_schema's transaction joins this one
+        with self._transaction():
             self.meta.setdefault("renames", []).append(
                 {
                     "version": int(self.meta["current_schema_version"]) + 1,
@@ -1728,10 +1717,9 @@ class LakeTable:
 
     def commit_spec(self, new_spec: PartitionSpec) -> int:
         sid = int(self.meta["current_spec_id"]) + 1
-        with self._reverting("specs", "current_spec_id"):
+        with self._transaction():
             self.meta["specs"][str(sid)] = new_spec.to_json()
             self.meta["current_spec_id"] = sid
-            self._commit()
         return sid
 
     # -- write path --------------------------------------------------------
@@ -2303,25 +2291,6 @@ class LakeTable:
             lineage_materialized=lineage_materialized,
         )[0]
 
-    @contextlib.contextmanager
-    def _reverting(self, *keys: str) -> Iterator[None]:
-        """Put the named top-level metadata values back if the block
-        raises: a failed commit leaves the handle as it was, so a retry
-        (or the next unrelated commit) cannot publish the failed
-        attempt's state. Saves a shallow copy of each value, never the
-        whole document — nested values the block changes must be
-        replaced, not mutated in place."""
-        saved = {k: copy.copy(self.meta[k]) for k in keys if k in self.meta}
-        try:
-            yield
-        except BaseException:
-            for k in keys:
-                if k in saved:
-                    self.meta[k] = saved[k]
-                else:
-                    self.meta.pop(k, None)
-            raise
-
     def _commit_snapshots(
         self,
         entries: list[dict[str, Any]],
@@ -2341,19 +2310,12 @@ class LakeTable:
         its data dir (else fresh), all share one timestamp, they take
         consecutive sequence numbers and the current schema and spec.
         Multi-entry commits (a mask plus its re-append) land in ONE
-        metadata commit, so no reader can observe the torn state. On
-        any failure every metadata value this changed is put back
-        before the error propagates; the written files become orphans
-        remove_orphan_files reaps."""
+        metadata commit, so no reader can observe the torn state. A
+        failed commit puts the document back (``_transaction``); the
+        written files become orphans remove_orphan_files reaps."""
         now = int(time.time() * 1000)
         seq = int(self.meta.get("last_sequence_number", 0))
-        with self._reverting(
-            "last_sequence_number",
-            "next_row_id",
-            "snapshots",
-            "snapshot_history",
-            "branches",
-        ):
+        with self._transaction():
             snaps = []
             for e in entries:
                 e = {"data_dir": "", **e}
@@ -2419,7 +2381,6 @@ class LakeTable:
                     *(s for s in live if s["snapshot_id"] not in replaces),
                     *new,
                 ]
-            self._commit()
         return snaps
 
     # -- branches (Iceberg branch refs; write-audit-publish) ---------------
@@ -2444,19 +2405,20 @@ class LakeTable:
             raise TableFormatError("'main' is the table itself")
         if name in (self.meta.get("tags") or {}):
             raise TableFormatError(f"ref {name!r} already names a tag")
-        branches = self.meta.setdefault("branches", {})
-        if name in branches:
+        if name in self.branches:
             raise TableFormatError(f"branch {name!r} already exists")
-        branches[name] = {"snapshots": list(self.meta["snapshots"])}
-        self._commit()
+        with self._transaction():
+            self.meta.setdefault("branches", {})[name] = {
+                "snapshots": list(self.meta["snapshots"])
+            }
 
     def drop_branch(self, name: str) -> None:
         """Abandon a staging branch. Its unpublished snapshot dirs
         become orphans (remove_orphan_files reaps them) — the audit
         failed, nothing was published."""
         self._branch(name)  # raises on unknown
-        del self.meta["branches"][name]
-        self._commit()
+        with self._transaction():
+            del self.meta["branches"][name]
 
     def fast_forward(self, name: str) -> int:
         """Publish a staging branch: main's live list becomes the
@@ -2484,7 +2446,7 @@ class LakeTable:
             {**s, "files": [dict(f) for f in s["files"]]}
             for s in br["snapshots"][len(main_ids):]
         ]
-        with self._reverting("next_row_id", "snapshots", "branches"):
+        with self._transaction():
             self._assign_row_ids(
                 [
                     f
@@ -2496,7 +2458,6 @@ class LakeTable:
             )
             self.meta["snapshots"] = [*self.meta["snapshots"], *new]
             del self.meta["branches"][name]
-            self._commit()
         return published
 
     def _warn_dual_layout_file_product(
@@ -3188,61 +3149,58 @@ class LakeTable:
             raise TableFormatError(
                 "sort_by and cluster_by are mutually exclusive"
             )
-        # snapshot BEFORE any declaration mutation: both the sort_by
-        # declaration below and the cluster_by mutation inside the try
-        # (sets meta['clustering'], pops sort_order + write.sort-order)
-        # revert through this on a failed rewrite — a crash during
-        # _write must not leave an unapplied layout claim for the next
-        # unrelated commit to persist (ADVICE r12 medium finding)
-        declared_prior = self._declaration_snapshot()
-        declared = self.sort_order_fields
-        if not sort_by and not cluster_by and declared:
-            # a plain compact() on a table with a DECLARED sort order
-            # applies it (Iceberg's rewrite_data_files sort strategy
-            # defaults to the table sort order) — maintenance must not
-            # silently destroy the declared layout
-            sort_fields = declared
-        elif sort_by:
-            # an EXPLICIT sort_by (re)declares the table sort order.
-            # Parse + declare UP FRONT — before to_df, the rewrite, or
-            # any other mutation — through the same parser CREATE/SET
-            # use, so transforms ('month(ts)') and direction ('v DESC')
-            # work PHYSICALLY (the parsed fields feed _sort_columns
-            # below) and validation (schema membership, transform
-            # vocabulary, bucket-layout composition rules) fails free
-            # of side effects. Mirroring into write.sort-order keeps
-            # the property document the single source of truth
-            # (SHOW CREATE, export, refresh_declared_sort_order all
-            # read one place). declared_prior (above) ALSO guards
-            # the rewrite below: a compact that declares and then
-            # fails mid-write reverts the in-memory declaration, so a
-            # later unrelated commit can't persist an order the failed
-            # compact never applied (r12 review finding).
-            self.update_properties_validated(
-                updates={"write.sort-order": ", ".join(sort_by)}
-            )
-            sort_fields = self.sort_order_fields
-        else:
-            sort_fields = []
-        # NOTE: when the table declares write.target-file-size-bytes,
-        # the commit below is already size-bounded by _write_files'
-        # maxRecordsPerFile cap — a compaction that would AQE-coalesce a
-        # large live set into one oversized-footer file (the measured 4x
-        # scan hazard, SCALE.md round-9) splits at the target without
-        # the extra shuffle an explicit target_files repartition costs.
-        # target_files stays the explicit COUNT knob for range-prunable
-        # layouts (sort_by/cluster_by want a real range partitioning).
-        # v3 row lineage through rewrites (a43, the spec's `_row_id`
-        # column materialization): when every live data file carries a
-        # commit-time assignment, the rewrite input is lineage_df —
-        # each surviving row's _row_id / _last_updated_sequence_number
-        # ride through the rewrite as PHYSICAL columns in the
-        # compacted files (normal scans align them away; lineage reads
-        # coalesce them over positional derivation). Pre-lineage
-        # histories compact exactly as before (no columns, and
-        # lineage_df keeps refusing on them).
-        carry_lineage = self._lineage_assignable()
-        try:
+        with self._transaction():
+            declared = self.sort_order_fields
+            if not sort_by and not cluster_by and declared:
+                # a plain compact() on a table with a DECLARED sort
+                # order applies it (Iceberg's rewrite_data_files sort
+                # strategy defaults to the table sort order) —
+                # maintenance must not silently destroy the declared
+                # layout
+                sort_fields = declared
+            elif sort_by:
+                # an EXPLICIT sort_by (re)declares the table sort
+                # order. Parse + declare UP FRONT — before to_df, the
+                # rewrite, or any other mutation — through the same
+                # parser CREATE/SET use, so transforms ('month(ts)')
+                # and direction ('v DESC') work PHYSICALLY (the parsed
+                # fields feed _sort_columns below) and validation
+                # (schema membership, transform vocabulary,
+                # bucket-layout composition rules) fails free of side
+                # effects. Mirroring into write.sort-order keeps the
+                # property document the single source of truth (SHOW
+                # CREATE, export, refresh_declared_sort_order all read
+                # one place). The declaration joins this transaction:
+                # a compact that declares and then fails mid-write
+                # reverts it, so a later unrelated commit can't
+                # persist an order the failed compact never applied.
+                self.update_properties_validated(
+                    updates={"write.sort-order": ", ".join(sort_by)}
+                )
+                sort_fields = self.sort_order_fields
+            else:
+                sort_fields = []
+            # NOTE: when the table declares
+            # write.target-file-size-bytes, the commit below is already
+            # size-bounded by _write_files' maxRecordsPerFile cap — a
+            # compaction that would AQE-coalesce a large live set into
+            # one oversized-footer file (the measured 4x scan hazard,
+            # SCALE.md round-9) splits at the target without the extra
+            # shuffle an explicit target_files repartition costs.
+            # target_files stays the explicit COUNT knob for
+            # range-prunable layouts (sort_by/cluster_by want a real
+            # range partitioning).
+            # v3 row lineage through rewrites (a43, the spec's
+            # `_row_id` column materialization): when every live data
+            # file carries a commit-time assignment, the rewrite input
+            # is lineage_df — each surviving row's _row_id /
+            # _last_updated_sequence_number ride through the rewrite
+            # as PHYSICAL columns in the compacted files (normal scans
+            # align them away; lineage reads coalesce them over
+            # positional derivation). Pre-lineage histories compact
+            # exactly as before (no columns, and lineage_df keeps
+            # refusing on them).
+            carry_lineage = self._lineage_assignable()
             df = (
                 self.lineage_df(spark)
                 if carry_lineage
@@ -3290,18 +3248,6 @@ class LakeTable:
                 presorted=True,
                 lineage_materialized=carry_lineage,
             )  # moves old live to history
-        except Exception:
-            if sort_by or cluster_by:
-                # the rewrite failed after the declaration/layout
-                # mutation: revert the in-memory handle so a later
-                # unrelated commit cannot persist a layout this
-                # compact never applied (nothing durable happened —
-                # _write commits metadata only after the data write
-                # succeeds). Covers BOTH halves of a z-order compact:
-                # the minted clustering claim and the destroyed
-                # sort-order declaration (ADVICE r12 medium finding).
-                self._restore_declaration(declared_prior)
-            raise
 
     def compact_position_deletes(self, spark: SparkSession) -> "Snapshot | None":
         """Iceberg ``rewrite_position_delete_files`` analog: merge ALL
@@ -3574,8 +3520,7 @@ class LakeTable:
             raise TableFormatError(
                 f"ref {name!r} already names a branch"
             )
-        tags = self.meta.setdefault("tags", {})
-        if name in tags:
+        if name in self.tags:
             raise TableFormatError(
                 f"tag {name!r} already exists (drop_tag first)"
             )
@@ -3595,15 +3540,14 @@ class LakeTable:
             raise TableFormatError(
                 f"cannot tag expired snapshot {snapshot_id!r}"
             )
-        tags[name] = snapshot_id
-        self._commit()
+        with self._transaction():
+            self.meta.setdefault("tags", {})[name] = snapshot_id
 
     def drop_tag(self, name: str) -> None:
-        tags = self.meta.get("tags") or {}
-        if name not in tags:
+        if name not in self.tags:
             raise TableFormatError(f"unknown tag {name!r}")
-        del tags[name]
-        self._commit()
+        with self._transaction():
+            del self.meta["tags"][name]
 
     def refs_df(self, spark: SparkSession) -> DataFrame:
         """The ref inventory (Iceberg's ``db.tbl.refs`` metadata
@@ -3680,44 +3624,47 @@ class LakeTable:
         if not expired_now:
             return []
         expired_ids = {s.snapshot_id for s in expired_now}
-        for s in self.meta.get("snapshot_history", []):
-            if s["snapshot_id"] in expired_ids:
-                s["expired"] = True
-        # A retained snapshot's state is the union of its segment's
-        # ancestors (log-structured format) — data dirs AND predicate
-        # deletes alike: compute every snapshot ID some retained
-        # snapshot still needs; tombstoned ancestors inside a retained
-        # lineage stay (a dropped interior predicate delete would
-        # RESURRECT its deleted rows in later reads), fully-unneeded
-        # ones are dropped outright and their dirs deleted.
-        by_id = {s.snapshot_id: s for s in self.all_snapshots()}
-        needed_ids: set[str] = set()
-        for s, seg in self._segments():
-            if s.expired:
-                continue
-            # a manifest rewrite (rewrite_manifests) DEPENDS on its
-            # source snapshots' dirs — unlike a data rewrite, it never
-            # copied the bytes. Keep the whole source closure, earlier
-            # folds included (a later fold resolves through their
-            # entries), or the dir delete below destroys live data.
-            needed_ids.update(
-                y.snapshot_id
-                for x in seg
-                for y in self._expand_manifest_sources(x, by_id)
-            )
-        drop = [
-            s
-            for s in self.meta.get("snapshot_history", [])
-            if s.get("expired") and s["snapshot_id"] not in needed_ids
-        ]
-        drop_ids = {s["snapshot_id"] for s in drop}
-        self.meta["snapshot_history"] = [
-            s
-            for s in self.meta.get("snapshot_history", [])
-            if s["snapshot_id"] not in drop_ids
-        ]
-        self._commit()  # metadata first: a crash leaves orphans, not
-        # dangling references (remove_orphan_files reaps them)
+        # metadata first: a crash leaves orphans, not dangling
+        # references (remove_orphan_files reaps them)
+        with self._transaction():
+            self.meta["snapshot_history"] = [
+                {**s, "expired": True} if s["snapshot_id"] in expired_ids
+                else s
+                for s in self.meta["snapshot_history"]
+            ]
+            # A retained snapshot's state is the union of its segment's
+            # ancestors (log-structured format) — data dirs AND predicate
+            # deletes alike: compute every snapshot ID some retained
+            # snapshot still needs; tombstoned ancestors inside a retained
+            # lineage stay (a dropped interior predicate delete would
+            # RESURRECT its deleted rows in later reads), fully-unneeded
+            # ones are dropped outright and their dirs deleted.
+            by_id = {s.snapshot_id: s for s in self.all_snapshots()}
+            needed_ids: set[str] = set()
+            for s, seg in self._segments():
+                if s.expired:
+                    continue
+                # a manifest rewrite (rewrite_manifests) DEPENDS on its
+                # source snapshots' dirs — unlike a data rewrite, it never
+                # copied the bytes. Keep the whole source closure, earlier
+                # folds included (a later fold resolves through their
+                # entries), or the dir delete below destroys live data.
+                needed_ids.update(
+                    y.snapshot_id
+                    for x in seg
+                    for y in self._expand_manifest_sources(x, by_id)
+                )
+            drop = [
+                s
+                for s in self.meta.get("snapshot_history", [])
+                if s.get("expired") and s["snapshot_id"] not in needed_ids
+            ]
+            drop_ids = {s["snapshot_id"] for s in drop}
+            self.meta["snapshot_history"] = [
+                s
+                for s in self.meta.get("snapshot_history", [])
+                if s["snapshot_id"] not in drop_ids
+            ]
         for s in drop:
             for d in Snapshot.from_json(s).dirs:
                 self.data_io.delete_recursive(str(self.location / d))
@@ -3969,14 +3916,14 @@ class LakeTable:
         live_ids = {x.snapshot_id for x in seg}
         # restored segment becomes live; earlier intact segments stay
         # in history; the abandoned fork (> target) is dropped outright
-        self.meta["snapshot_history"] = [
-            s
-            for s in self.meta.get("snapshot_history", [])
-            if s["snapshot_id"] not in live_ids
-            and Snapshot.from_json(s).sequence_number <= target_seq
-        ]
-        self.meta["snapshots"] = [x.to_json() for x in seg]
-        self._commit()
+        with self._transaction():
+            self.meta["snapshot_history"] = [
+                s
+                for s in self.meta.get("snapshot_history", [])
+                if s["snapshot_id"] not in live_ids
+                and Snapshot.from_json(s).sequence_number <= target_seq
+            ]
+            self.meta["snapshots"] = [x.to_json() for x in seg]
         for s in displaced:
             for d in s.dirs:
                 self.data_io.delete_recursive(str(self.location / d))

@@ -1,5 +1,6 @@
 """A failed metadata commit leaves the handle as it was, for every
-snapshot-producing op and for schema/spec evolution.
+snapshot-producing op, for schema/spec evolution and for the
+metadata-only ref and history ops.
 
 An Iceberg commit either lands or changes nothing; a handle whose
 in-memory metadata ran ahead of a failed commit would publish the
@@ -141,6 +142,36 @@ OPS = {
             )
         ),
     ),
+    "create_branch": (None, lambda s, t, a: t.create_branch("b")),
+    "drop_branch": (
+        lambda s, t, p: t.create_branch("b"),
+        lambda s, t, a: t.drop_branch("b"),
+    ),
+    "fast_forward": (
+        lambda s, t, p: (
+            t.create_branch("b"), t.append(_rows(s, 100, 110), branch="b")
+        ),
+        lambda s, t, a: t.fast_forward("b"),
+    ),
+    "create_tag": (None, lambda s, t, a: t.create_tag("tg")),
+    "drop_tag": (
+        lambda s, t, p: t.create_tag("tg"),
+        lambda s, t, a: t.drop_tag("tg"),
+    ),
+    # the expired first append stays as a tombstone the retained
+    # second one needs, so only its "expired" flag changes
+    "expire_snapshots": (
+        lambda s, t, p: (
+            t.append(_rows(s, 10, 20)), t.overwrite(_rows(s, 0, 5))
+        ),
+        lambda s, t, a: t.expire_snapshots(retain_last=1),
+    ),
+    "rollback_to_snapshot": (
+        lambda s, t, p: (
+            t.snapshots[-1].snapshot_id, t.append(_rows(s, 10, 20))
+        )[0],
+        lambda s, t, a: t.rollback_to_snapshot(a),
+    ),
 }
 
 
@@ -168,3 +199,20 @@ def test_failed_commit_leaves_handle_unchanged(spark, tmp_path, name):
         op(spark, t, arg)
         assert t.to_df(spark).count() == 20
         assert int(t.meta["last_sequence_number"]) == 2
+
+
+@pytest.mark.parametrize("name", sorted(OPS))
+def test_op_writes_one_metadata_version(spark, tmp_path, name):
+    """Nested transactions join the outermost one, so each op
+    publishes exactly one metadata version."""
+    setup, op = OPS[name]
+    t = LakeCatalog(str(tmp_path / "wh")).create_table("db", "t", SCHEMA)
+    t.append(_rows(spark, 0, 10))
+    arg = setup(spark, t, tmp_path) if setup else None
+
+    def versions():
+        return len(list((t.location / "_meta").glob("v*.metadata.json")))
+
+    before = versions()
+    op(spark, t, arg)
+    assert versions() == before + 1
