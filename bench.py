@@ -57,7 +57,21 @@ def plan_fingerprint(df) -> str:
     and stats vary per session, so strip them before hashing. Lets a
     reader of BENCH_r{N}.json distinguish 'the plan changed' from 'the
     box was noisy' when a query's time moves between rounds."""
+    from sample_iceberg_schema_evolution_pyiceberg_spark import sources
+
     s = df._jdf.queryExecution().executedPlan().toString()
+    # the split cache, the warehouse and the input dir may all sit under
+    # the checkout, and the cache entries are named after the input dir:
+    # mask them so two checkouts of one commit fingerprint alike
+    for root in (
+        sources._SPLIT_CACHE_DIR,
+        df.sparkSession.conf.get("spark.sql.warehouse.dir"),
+    ):
+        root = os.path.abspath(root.removeprefix("file:"))
+        s = re.sub(re.escape(root) + r"/[^\s,)\]]*", "<scratch>", s)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if sf_dir:
+        s = s.replace(f"bkt_{sources._dir_tag(sf_dir)}_", "bkt_")
     s = re.sub(r"#\d+L?", "#", s)
     # higher-order-function lambda variables (zip_with/aggregate/...)
     # mint fresh names per query construction: x_123 -> x_. Anchored to

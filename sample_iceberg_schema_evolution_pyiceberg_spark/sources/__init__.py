@@ -44,6 +44,14 @@ _SPLIT_FILES = 32  # target files per table (matches local core count)
 _MIN_SPLIT_ROWS = 20_000  # below this a single task is already optimal
 
 
+def _dir_tag(path: str) -> str:
+    """``path`` as a table-name fragment: the bucketed-layout tables
+    are named after their input dir this way."""
+    return "".join(
+        ch if ch.isalnum() else "_" for ch in os.path.abspath(path)
+    ).strip("_").lower()
+
+
 def _source_stamp(path: str) -> str:
     """Single definition of the source-file staleness fingerprint used
     by BOTH derived-layout caches (split cache + bucketed layout):
@@ -317,9 +325,6 @@ def bucketed_table(
     if buckets is None:
         buckets = buckets_for(sf_dir)
     base = load_table(spark, sf_dir, name)
-    safe = "".join(
-        ch if ch.isalnum() else "_" for ch in os.path.abspath(sf_dir)
-    ).strip("_").lower()
     # source fingerprint in the name (same _source_stamp the split
     # cache keys on): a regenerated source file gets a fresh layout
     # instead of silently serving the old rows through the _SUCCESS
@@ -329,7 +334,7 @@ def bucketed_table(
         stamp = _source_stamp(f"{sf_dir}/{name}.parquet").replace("-", "_")
     except OSError:
         return base
-    prefix = f"bkt_{safe}_{name}_{key}_{buckets}_".lower()
+    prefix = f"bkt_{_dir_tag(sf_dir)}_{name}_{key}_{buckets}_".lower()
     tbl = prefix + stamp
     try:
         if not spark.catalog.tableExists(tbl):

@@ -25,28 +25,20 @@ never streamed:
   count, same as the batch path;
 - schema alignment happens per file in Arrow, the executor-side form
   of ``LakeTable._as_current``: columns take the current names the
-  planner's ``LakeTable._renames_since`` map gives for the schema
+  driver-side ``LakeTable._renames_since`` map gives for the schema
   version the file was written under, then align RECURSIVELY (missing
   columns/struct fields -> nulls, promoted types -> cast, incl.
   structs and arrays-of-structs);
 - per-batch admission control (``maxFilesPerTrigger`` option):
   offsets are file-granular — ``{"seq": N, "file": K}`` means the
   first K files of snapshot N are delivered — so a large snapshot or
-  backfill splits across micro-batches at a file-count cap. A capped
-  stream runs on ``LakeSimpleStreamReader`` (the Python API's
-  SimpleDataSourceStreamReader): its ``read(start)`` receives the
-  authoritative start offset every batch, making the cap exact and
-  recovery-safe with zero reader-instance state, at the documented
-  cost of rows flowing through the driver-side worker — bounded by
-  the cap itself, the regime this reader exists for (catch-up /
-  backfill). Uncapped streams keep the DISTRIBUTED reader (one
-  executor task per file). ``reader=distributed`` (r12) engages the
-  capped DISTRIBUTED path for 100 TB-scale backfills — rows stay on
-  executors; ``latestOffset()`` has no start argument, so recovery
-  safety comes from a monotonic position floor learned from the
-  authoritative offsets Spark passes to ``partitions``/``commit``
-  (see LakeStreamReader: a post-restart regressed end plans an EMPTY
-  batch instead of re-delivering the gap).
+  backfill splits across micro-batches at a file-count cap. Capped or
+  not, one reader serves the stream (``LakeStreamReader``) and rows
+  stay on executors, one task per file. ``latestOffset()`` has no
+  start argument, so a capped stream's recovery safety comes from a
+  monotonic position floor learned from the authoritative offsets
+  Spark passes to ``partitions``/``commit`` (a post-restart regressed
+  end plans an EMPTY batch instead of re-delivering the gap).
 - CONTRACT — admission cap vs ``Trigger.AvailableNow``: Python data
   sources cannot declare AvailableNow support, so Spark falls back to
   SINGLE-batch execution. With a cap set, that one batch ends at the
@@ -86,12 +78,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
-from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 
 SOURCE_NAME = "lake_stream"
@@ -148,25 +138,70 @@ def _align_arrow(arr, target):
     return arr.cast(target)
 
 
-class _LakeLogPlanner:
-    """Shared metadata-plane planning for both reader flavors: the
-    snapshot log -> file-granular offsets. An offset is
-    ``{"seq": N}`` (snapshot N fully delivered — legacy offsets
-    included) or ``{"seq": N, "file": K}`` (first K files of snapshot
-    N delivered), optionally carrying ``base`` (the one non-append
-    snapshot granted as a fresh stream's base load)."""
+class LakeStreamReader(DataSourceStreamReader):
+    """The lake stream reader: offsets are planned from the snapshot
+    log on the driver-side worker, data flows through executors (one
+    task per data file). An offset is ``{"seq": N}`` (snapshot N fully
+    delivered — legacy offsets included) or ``{"seq": N, "file": K}``
+    (first K files of snapshot N delivered), optionally carrying
+    ``base`` (the one non-append snapshot granted as a fresh stream's
+    base load). With ``max_files`` set (``maxFilesPerTrigger``) each
+    batch ends at most that many files past its start.
 
-    location: str
-    # reconstructible metadata-backend handle (fileio.FileIO.to_options
-    # serialized into the data-source options by stream_changes): this
-    # planner runs in its own worker process, so the backend must be
-    # rebuilt here, not shared — {} means the local filesystem
-    io_options: dict
+    Recovery safety under the cap: the Python streaming API gives
+    ``latestOffset()`` no start argument, so after a restart a fresh
+    reader instance would advance from the INITIAL offset and could
+    hand Spark an end offset behind the checkpointed start — the
+    next batch would then re-deliver rows in the gap. The guard is a
+    monotonic position FLOOR learned from every authoritative offset
+    Spark passes in (``partitions(start, ...)`` carries the
+    checkpointed start on replay; ``commit(end)`` the completed end):
+    ``partitions`` plans from ``max(start, floor)``, so a
+    regressed-offset batch plans EMPTY instead of re-delivering, and
+    the stream re-converges one empty micro-batch later. In normal
+    operation the floor equals the previous batch's end and the
+    clamp is a no-op."""
+
+    def __init__(
+        self,
+        location: str,
+        schema: T.StructType,
+        io_options: dict | None = None,
+        max_files: int = 0,
+    ):
+        self.location = location
+        self.schema = schema
+        # reconstructible metadata-backend handle (fileio.FileIO.to_options
+        # serialized into the data-source options by stream_changes): the
+        # reader runs in its own worker process, so the backend is rebuilt
+        # here, not shared — {} means the local filesystem
+        self.io_options = io_options or {}
+        self.max_files = int(max_files)
+        # authoritative position floor: fed ONLY by offsets Spark
+        # passes in (partitions' start, commit's end) — the dup guard
+        self._floor: dict | None = None
+        # speculative high-water of our own latestOffset returns:
+        # between latestOffset and the batch's commit, the floor still
+        # points at the previous batch — advancing from the floor
+        # alone would re-return the same end and Spark would declare
+        # the stream caught up mid-backfill. Never used for clamping
+        # (speculation ahead of an authoritative start must not skip
+        # rows); dies with the instance, which is safe because the
+        # floor alone prevents post-restart duplicates.
+        self._emitted: dict | None = None
+        # the initial offset THIS instance served to Spark, set only
+        # by initialOffset() — which the engine calls only when the
+        # offset log is EMPTY, i.e. for a genuinely NEW stream. That
+        # makes it the one safe carrier of a base-load grant into the
+        # first speculation (a RESTARTED instance never sees the call,
+        # so it can never mint a grant a rewrite-after-checkpoint
+        # would abuse).
+        self._initial: dict | None = None
 
     def _io(self):
         from ..fileio import fileio_from_options  # noqa: PLC0415
 
-        return fileio_from_options(getattr(self, "io_options", {}) or {})
+        return fileio_from_options(self.io_options)
 
     def _table(self):
         from ..table_format import LakeTable  # noqa: PLC0415
@@ -383,7 +418,7 @@ class _LakeLogPlanner:
         """One parquet file -> Arrow table aligned to the stream
         schema, the Arrow form of ``LakeTable._as_current``: hidden
         ``_p_*`` partition columns drop, columns take the current names
-        the planner mapped from the rename log (``partition.renames``),
+        ``partitions`` mapped from the rename log (``partition.renames``),
         alignment is recursive (``_align_arrow``), and the CDC metadata
         columns append."""
         import pyarrow as pa  # noqa: PLC0415
@@ -411,61 +446,6 @@ class _LakeLogPlanner:
         cols.append(pa.array(["insert"] * n, type=pa.string()))
         return pa.table(cols, schema=out_schema)
 
-
-class LakeStreamReader(_LakeLogPlanner, DataSourceStreamReader):
-    """The DISTRIBUTED reader (default, one executor task per data
-    file): offsets are planned on the driver-side worker, data flows
-    through executors. With ``max_files`` set (``maxFilesPerTrigger``
-    + ``reader=distributed``) it applies the same (seq, file) offset
-    chunking as the simple reader, so a 100 TB backfill gets
-    admission control WITHOUT routing rows through the single
-    driver-side worker process (VERDICT r10 item 7).
-
-    Recovery safety under the cap: the Python streaming API gives
-    ``latestOffset()`` no start argument, so after a restart a fresh
-    reader instance would advance from the INITIAL offset and could
-    hand Spark an end offset behind the checkpointed start — the
-    next batch would then re-deliver rows in the gap. The guard is a
-    monotonic position FLOOR learned from every authoritative offset
-    Spark passes in (``partitions(start, ...)`` carries the
-    checkpointed start on replay; ``commit(end)`` the completed end):
-    ``partitions`` plans from ``max(start, floor)``, so a
-    regressed-offset batch plans EMPTY instead of re-delivering, and
-    the stream re-converges one empty micro-batch later. In normal
-    operation the floor equals the previous batch's end and the
-    clamp is a no-op."""
-
-    def __init__(
-        self,
-        location: str,
-        schema: T.StructType,
-        io_options: dict | None = None,
-        max_files: int = 0,
-    ):
-        self.location = location
-        self.schema = schema
-        self.io_options = io_options or {}
-        self.max_files = int(max_files)
-        # authoritative position floor: fed ONLY by offsets Spark
-        # passes in (partitions' start, commit's end) — the dup guard
-        self._floor: dict | None = None
-        # speculative high-water of our own latestOffset returns:
-        # between latestOffset and the batch's commit, the floor still
-        # points at the previous batch — advancing from the floor
-        # alone would re-return the same end and Spark would declare
-        # the stream caught up mid-backfill. Never used for clamping
-        # (speculation ahead of an authoritative start must not skip
-        # rows); dies with the instance, which is safe because the
-        # floor alone prevents post-restart duplicates.
-        self._emitted: dict | None = None
-        # the initial offset THIS instance served to Spark, set only
-        # by initialOffset() — which the engine calls only when the
-        # offset log is EMPTY, i.e. for a genuinely NEW stream. That
-        # makes it the one safe carrier of a base-load grant into the
-        # first speculation (a RESTARTED instance never sees the call,
-        # so it can never mint a grant a rewrite-after-checkpoint
-        # would abuse).
-        self._initial: dict | None = None
 
     def _learn(self, off: dict) -> None:
         if self._floor is None or self._pos(off) > self._pos(self._floor):
@@ -552,57 +532,6 @@ class LakeStreamReader(_LakeLogPlanner, DataSourceStreamReader):
         yield from self._aligned_table(partition).to_batches()
 
 
-class LakeSimpleStreamReader(_LakeLogPlanner, SimpleDataSourceStreamReader):
-    """The ADMISSION-CONTROLLED reader (``maxFilesPerTrigger``):
-    ``read(start)`` receives the authoritative start offset on every
-    call — Spark's prefetch wrapper initializes it from the
-    checkpoint on restart — so the cap is exact and recovery-safe by
-    construction (no reader-instance state). The trade, per the
-    SimpleDataSourceStreamReader contract, is that rows flow through
-    the driver-side worker; the cap itself bounds each batch, which
-    is exactly the regime this reader is for (bounded catch-up /
-    backfill). Steady-state high-throughput streams should leave the
-    cap unset and get the distributed reader."""
-
-    def __init__(
-        self,
-        location: str,
-        schema: T.StructType,
-        max_files: int,
-        io_options: dict | None = None,
-    ):
-        self.location = location
-        self.schema = schema
-        self.max_files = int(max_files)
-        self.io_options = io_options or {}
-
-    def initialOffset(self) -> dict:
-        return self._initial_offset()
-
-    def _rows(self, start: dict, end: dict):
-        # materialized (not a generator): Spark's prefetch wrapper
-        # copy.copy()s the cached iterator for replay, which requires
-        # a copyable list iterator; the cap bounds the materialization
-        rows = []
-        for part in self._plan_files(start, end):
-            tbl = self._aligned_table(part)
-            cols = [c.to_pylist() for c in tbl.columns]
-            if cols:
-                rows.extend(zip(*cols))
-        return rows
-
-    def read(self, start: dict):
-        end = self._advance(start, self.max_files)
-        return iter(self._rows(start, end)), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        # exact replay of a write-ahead-logged batch after restart
-        return iter(self._rows(start, end))
-
-    def commit(self, end: dict) -> None:
-        pass
-
-
 class LakeStreamDataSource(DataSource):
     """``spark.readStream.format("lake_stream")`` — see module
     docstring. Required option: ``path`` (the table location)."""
@@ -633,50 +562,12 @@ class LakeStreamDataSource(DataSource):
         )
         return T.StructType(list(table.schema.fields) + _META_FIELDS)
 
-    def _cap(self) -> int:
-        return int(self.options.get("maxfilespertrigger", 0))
-
-    def _reader_mode(self) -> str:
-        """``reader`` option: '' (default routing), 'simple', or
-        'distributed'. Default routing keeps the historical choice —
-        capped streams take the simple reader (exact recovery-safe cap
-        by construction), uncapped the distributed one.
-        ``reader=distributed`` engages the capped DISTRIBUTED path
-        (executor-parallel file reads + floor-guarded admission
-        control — the 100 TB backfill shape)."""
-        mode = str(self.options.get("reader", "")).lower()
-        if mode not in ("", "simple", "distributed"):
-            raise ValueError(
-                f"unknown reader mode {mode!r} (simple | distributed)"
-            )
-        return mode
-
     def streamReader(self, schema: T.StructType) -> LakeStreamReader:
-        mode = self._reader_mode()
-        if mode == "simple" or (self._cap() > 0 and mode != "distributed"):
-            # steer Spark's _streamReader fallback to the simple
-            # (admission-controlled) reader
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "capped streamReader"},
-            )
         return LakeStreamReader(
-            self.options["path"], schema, self._io_options(), self._cap()
-        )
-
-    def simpleStreamReader(
-        self, schema: T.StructType
-    ) -> LakeSimpleStreamReader:
-        if self._reader_mode() == "distributed":
-            # streamReader() above never raises under reader=distributed,
-            # so Spark's fallback must not land here — reaching this is
-            # a routing bug, and failing loudly keeps the e2e tests an
-            # actual proof that the distributed path served the stream
-            raise RuntimeError(
-                "simple reader requested under reader=distributed"
-            )
-        return LakeSimpleStreamReader(
-            self.options["path"], schema, self._cap(), self._io_options()
+            self.options["path"],
+            schema,
+            self._io_options(),
+            int(self.options.get("maxfilespertrigger", 0)),
         )
 
 

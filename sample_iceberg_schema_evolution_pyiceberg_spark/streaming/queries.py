@@ -495,9 +495,11 @@ def s10_stream_lake_replication(spark: SparkSession, sf: str) -> DataFrame:
     with tempfile.TemporaryDirectory(prefix="stream_rep_") as wh:
         cat = LakeCatalog(wh)
         src = cat.create_table("stream", "rep_src", o.schema)
-        for lo, hi in ((0, 1000), (1001, 2000), (2001, 3000)):
+        # split by residue, not by key range: every scale factor's
+        # keys land in all three appends
+        for i in range(3):
             src.append(
-                o.filter(F.col("o_orderkey").between(lo, hi)).coalesce(1)
+                o.filter(F.pmod("o_orderkey", F.lit(3)) == i).coalesce(1)
             )
         replica = cat.create_table("stream", "rep_dst", o.schema)
         spark.conf.set(key, "8")
@@ -545,14 +547,12 @@ _BACKFILL_ORACLE = """
            ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 6)
              AS total,
            TRUE AS cap_honored, TRUE AS multi_batch, TRUE AS drained
-    FROM orders WHERE o_orderkey > 3000 AND o_orderkey <= 5400
+    FROM orders WHERE o_orderkey <= 2400
     GROUP BY o_orderstatus
     """
 
 
-def _backfill_capped(
-    spark: SparkSession, sf: str, reader_mode: "str | None"
-) -> DataFrame:
+def _backfill_capped(spark: SparkSession, sf: str) -> DataFrame:
     """Shared body of s11/s12 — rate-limited streaming BACKFILL: a
     lake table with eight single-file appends is drained through
     ``drain_changes`` under a 2-files-per-micro-batch admission cap
@@ -561,28 +561,21 @@ def _backfill_capped(
     no batch ever admits more than the cap (observed per batch inside
     foreachBatch via distinct source snapshots — each append is one
     file), and the replica hash-matches the relational oracle over the
-    same parquet. ``reader_mode`` selects which reader serves the
-    capped stream (None = default routing -> the simple reader;
-    'distributed' = executor-parallel file reads with the
-    floor-guarded cap — lake_source.LakeStreamReader)."""
+    same parquet. The appends split the window by ``o_orderkey``
+    residue mod 8, so every scale factor's keys fill all eight."""
     import tempfile  # noqa: PLC0415
 
     from ..table_format import LakeCatalog  # noqa: PLC0415
 
-    o = t(spark, sf, "orders").filter(
-        (F.col("o_orderkey") > 3000) & (F.col("o_orderkey") <= 5400)
-    )
+    o = t(spark, sf, "orders").filter(F.col("o_orderkey") <= 2400)
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     with tempfile.TemporaryDirectory(prefix="stream_backfill_") as wh:
         cat = LakeCatalog(wh)
         src = cat.create_table("stream", "bf_src", o.schema)
         for i in range(8):
-            lo, hi = 3000 + i * 300, 3300 + i * 300
             src.append(
-                o.filter(
-                    (F.col("o_orderkey") > lo) & (F.col("o_orderkey") <= hi)
-                ).coalesce(1)
+                o.filter(F.pmod("o_orderkey", F.lit(8)) == i).coalesce(1)
             )
         replica = cat.create_table("stream", "bf_dst", o.schema)
         per_batch: list[int] = []
@@ -601,7 +594,6 @@ def _backfill_capped(
                     "checkpointLocation", f"{wh}/_chk"
                 ),
                 max_files_per_trigger=2,
-                reader_mode=reader_mode,
             )
         finally:
             spark.conf.set(key, old)
@@ -635,21 +627,16 @@ def _backfill_capped(
 
 @query("s11_stream_backfill_capped", oracle=_BACKFILL_ORACLE)
 def s11_stream_backfill_capped(spark: SparkSession, sf: str) -> DataFrame:
-    """Rate-limited streaming backfill on the SIMPLE reader (VERDICT
-    r9 item 7) — default routing; see _backfill_capped."""
-    return _backfill_capped(spark, sf, None)
+    """Rate-limited streaming backfill (VERDICT r9 item 7) on the one
+    lake stream reader, ``LakeStreamReader``; see _backfill_capped."""
+    return _backfill_capped(spark, sf)
 
 
 @query("s12_stream_backfill_capped_distributed", oracle=_BACKFILL_ORACLE)
 def s12_stream_backfill_capped_distributed(
     spark: SparkSession, sf: str
 ) -> DataFrame:
-    """The capped backfill served by the DISTRIBUTED reader (VERDICT
-    r10 item 7): same cap, same drained result, but file reads run as
-    executor tasks instead of through the single driver-side worker —
-    the 100 TB catch-up shape. The routing is proven, not assumed:
-    under reader=distributed the simple reader CANNOT serve the stream
-    (lake_source raises if Spark's fallback reaches it), so a green
-    hash on this key certifies the distributed path honored the
-    per-batch cap."""
-    return _backfill_capped(spark, sf, "distributed")
+    """The capped backfill of s11 (VERDICT r10 item 7), kept as its own
+    registry key: the same one reader, ``LakeStreamReader``, serves it
+    with file reads as executor tasks; see _backfill_capped."""
+    return _backfill_capped(spark, sf)

@@ -3741,7 +3741,6 @@ class LakeTable:
         self,
         spark: SparkSession,
         max_files_per_trigger: int = 0,
-        reader_mode: "str | None" = None,
     ) -> DataFrame:
         """Streaming incremental read (Iceberg's streaming-read analog
         — the source half of the s08 sink): each append surfaces in
@@ -3807,11 +3806,6 @@ class LakeTable:
             reader = reader.option(
                 "maxFilesPerTrigger", str(max_files_per_trigger)
             )
-        if reader_mode:
-            # 'simple' | 'distributed' (lake_source routing).
-            # reader=distributed + a cap = executor-parallel
-            # admission-controlled backfill (VERDICT r10 item 7).
-            reader = reader.option("reader", reader_mode)
         return reader.load()
 
     def drain_changes(
@@ -3819,7 +3813,6 @@ class LakeTable:
         spark: SparkSession,
         build_writer,
         max_files_per_trigger: int = 0,
-        reader_mode: "str | None" = None,
     ) -> int:
         """One-shot CAPPED catch-up over the snapshot log — the
         ``Trigger.AvailableNow`` shape the Python streaming API cannot
@@ -3840,9 +3833,7 @@ class LakeTable:
         stream: a second drain resumes where the first finished.
         Returns the number of non-empty micro-batches executed."""
         stream = self.stream_changes(
-            spark,
-            max_files_per_trigger=max_files_per_trigger,
-            reader_mode=reader_mode,
+            spark, max_files_per_trigger=max_files_per_trigger
         )
         q = build_writer(stream).start()
         try:

@@ -536,17 +536,17 @@ def test_lake_stream_bounded_backfill_splits_batches(spark, tmp_path):
 
 
 def test_lake_stream_reader_offset_arithmetic(tmp_path, spark):
-    """Unit-level offset algebra on the capped (simple) reader:
-    read(start) stops mid-snapshot with a (seq, file) offset; a
-    repeated read from the returned end picks up exactly the
-    remainder; readBetweenOffsets replays an exact range; legacy
-    {"seq": N} offsets still mean 'snapshot fully delivered'."""
+    """Unit-level offset algebra on the capped reader: latestOffset
+    stops mid-snapshot with a (seq, file) offset; after commit the next
+    latestOffset picks up exactly the remainder; a caught-up reader
+    keeps its offset; a restarted reader replays a logged range
+    exactly; legacy {"seq": N} offsets still mean 'snapshot fully
+    delivered'."""
     from pyspark.sql import functions as F
     from sample_iceberg_schema_evolution_pyiceberg_spark.table_format import (
         LakeCatalog,
     )
     from sample_iceberg_schema_evolution_pyiceberg_spark.streaming.lake_source import (
-        LakeSimpleStreamReader,
         LakeStreamReader,
         _META_FIELDS,
     )
@@ -557,27 +557,35 @@ def test_lake_stream_reader_offset_arithmetic(tmp_path, spark):
     table.append(df.filter("id < 8").repartition(4))   # snapshot 1: 4 files
     table.append(df.filter("id >= 8").coalesce(1))     # snapshot 2: 1 file
     stream_schema = T.StructType(list(table.schema.fields) + _META_FIELDS)
-    r = LakeSimpleStreamReader(
-        str(table.location), stream_schema, max_files=3
-    )
+    r = LakeStreamReader(str(table.location), stream_schema, max_files=3)
+
+    def ids(parts):
+        return [
+            i
+            for p in parts
+            for b in r.read(p)
+            for i in b.column("id").to_pylist()
+        ]
+
     start = r.initialOffset()
     assert start == {"seq": 0}
-    it1, end1 = r.read(start)
-    rows1 = list(it1)
+    end1 = r.latestOffset()
     assert end1 == {"seq": 1, "file": 3}  # capped mid-snapshot
-    it2, end2 = r.read(end1)              # resumes from the cap point
-    rows2 = list(it2)
+    parts1 = r.partitions(start, end1)
+    r.commit(end1)
+    end2 = r.latestOffset()               # resumes from the cap point
     assert end2 == {"seq": 2}             # 1 remaining file + snap 2
-    ids = sorted(row[0] for row in rows1 + rows2)
-    assert ids == list(range(12))         # lossless, no duplicates
-    # caught up: read returns the same offset and nothing else
-    it3, end3 = r.read(end2)
-    assert end3 == {"seq": 2} and list(it3) == []
-    # exact replay of a logged range (restart path)
-    replay = sorted(row[0] for row in r.readBetweenOffsets(start, end1))
-    assert replay == sorted(row[0] for row in rows1)
-    # the distributed reader understands the same file-granular
-    # offsets (and legacy full-snapshot ones)
+    parts2 = r.partitions(end1, end2)
+    r.commit(end2)
+    rows1 = ids(parts1)
+    assert sorted(rows1 + ids(parts2)) == list(range(12))  # lossless, no dups
+    # caught up: the offset stays put and the range plans nothing
+    assert r.latestOffset() == end2
+    assert r.partitions(end2, end2) == []
+    # exact replay of a logged range by a restarted reader
+    r2 = LakeStreamReader(str(table.location), stream_schema, max_files=3)
+    assert sorted(ids(r2.partitions(start, end1))) == sorted(rows1)
+    # file-granular and legacy full-snapshot offsets plan alike
     rd = LakeStreamReader(str(table.location), stream_schema)
     assert len(rd.partitions(end1, end2)) == 2
     assert len(rd.partitions({"seq": 1}, {"seq": 2})) == 1
@@ -649,11 +657,10 @@ def test_lake_stream_refuses_process_local_metadata(spark, tmp_path):
 
 
 def test_lake_stream_capped_nested_struct_evolution_aligns(spark, tmp_path):
-    """The ADMISSION-CONTROLLED (maxFilesPerTrigger -> simple reader)
-    path must align nested-struct evolution exactly like the
-    distributed reader: its Arrow-to-rows conversion runs per file, so
-    history written before a nested add-field streams with the new
-    field null-filled. Mirrors
+    """The ADMISSION-CONTROLLED (maxFilesPerTrigger) path must align
+    nested-struct evolution exactly like the uncapped one: alignment
+    runs per file, so history written before a nested add-field
+    streams with the new field null-filled. Mirrors
     test_lake_stream_nested_struct_evolution_aligns with a cap."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -843,19 +850,15 @@ def test_backfill_cap_honored_per_batch(spark, tmp_path):
 
 def test_capped_distributed_reader_routing_and_floor(tmp_path, spark):
     """r12 (VERDICT r10 item 7): the DISTRIBUTED reader takes an
-    admission cap. (a) Routing: a cap alone still steers to the simple
-    reader; reader=distributed serves capped streams from
-    LakeStreamReader and FORBIDS the simple fallback. (b) The capped
+    admission cap. (a) Routing: a capped source is served by
+    LakeStreamReader with the cap as its ``max_files``. (b) The capped
     quantum walk delivers every file exactly once. (c) Restart safety:
     a fresh reader instance whose latestOffset regresses behind the
     checkpoint plans an EMPTY batch (the authoritative floor learned
     from partitions' start clamps), then re-converges — never
     re-delivering the gap."""
-    from pyspark.errors import PySparkNotImplementedError
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
-
-    import pytest as _pytest
 
     from sample_iceberg_schema_evolution_pyiceberg_spark.streaming.lake_source import (
         LakeStreamDataSource,
@@ -873,23 +876,10 @@ def test_capped_distributed_reader_routing_and_floor(tmp_path, spark):
     stream_schema = T.StructType(list(table.schema.fields) + _META_FIELDS)
 
     # (a) routing
-    def _ds(**opts):
-        base = {"path": str(table.location)}
-        base.update(opts)
-        return LakeStreamDataSource(base)
-
-    with _pytest.raises(PySparkNotImplementedError):
-        _ds(maxfilespertrigger="2").streamReader(stream_schema)
-    rd = _ds(maxfilespertrigger="2", reader="distributed").streamReader(
-        stream_schema
-    )
+    rd = LakeStreamDataSource(
+        {"path": str(table.location), "maxfilespertrigger": "2"}
+    ).streamReader(stream_schema)
     assert isinstance(rd, LakeStreamReader) and rd.max_files == 2
-    with _pytest.raises(RuntimeError, match="reader=distributed"):
-        _ds(maxfilespertrigger="2", reader="distributed").simpleStreamReader(
-            stream_schema
-        )
-    with _pytest.raises(PySparkNotImplementedError):
-        _ds(reader="simple").streamReader(stream_schema)
 
     # (b) the capped quantum walk: 3 files at cap 2 -> 2+1
     r = LakeStreamReader(str(table.location), stream_schema, max_files=2)
@@ -964,7 +954,7 @@ def test_capped_distributed_restart_rewrite_refuses_base_regrant(
 def test_capped_distributed_base_load_chunks_across_batches(
     tmp_path, spark
 ):
-    """ADVICE r12 high finding: a fresh reader=distributed stream whose
+    """ADVICE r12 high finding: a fresh capped stream whose
     BASE snapshot (latest rewrite) is larger than the cap must chunk
     the base load across micro-batches — batch 2 used to wedge with
     'start a NEW stream' because the grant dropped out of the chunked
