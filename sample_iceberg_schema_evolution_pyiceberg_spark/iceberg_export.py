@@ -625,10 +625,10 @@ def _write_position_deletes(
     spark, table: LakeTable, pred_snap: Snapshot, out_dir: Path
 ) -> None:
     """Materialize one predicate-delete snapshot as a spec position-
-    delete file: scan each EARLIER data snapshot with Spark's
-    ``_metadata.file_path`` / ``_metadata.row_index`` columns, keep the
-    rows where the stored (null-safe) predicate is TRUE, and write
-    their (file, ordinal) tuples sorted by (file_path, pos) — the
+    delete file: scan each EARLIER data snapshot's manifest files with
+    Spark's ``_metadata.file_path`` / ``_metadata.row_index`` columns,
+    keep the rows where the stored (null-safe) predicate is TRUE, and
+    write their (file, ordinal) tuples sorted by (file_path, pos) — the
     spec's required delete-file ordering. Output size is bounded by
     the deleted-row count of the predicate, and the single-file
     coalesce keeps the manifest one entry; a cluster-scale export
@@ -637,9 +637,9 @@ def _write_position_deletes(
 
     arms = []
     for s in table._live_state(table.snapshots)[0]:
-        if s.sequence_number >= pred_snap.sequence_number:
-            continue  # the mask covers EARLIER data only
-        df = spark.read.parquet(str(table.location / s.data_dir))
+        if s.sequence_number >= pred_snap.sequence_number or not s.files:
+            continue  # the mask covers EARLIER, non-empty data only
+        df = spark.read.parquet(*table._paths(s.files))
         df = df.select(
             "*",
             # manifests store plain absolute paths; _metadata returns
@@ -1005,9 +1005,7 @@ def export_to_iceberg(
                     from pyspark.sql import functions as F  # noqa: PLC0415
 
                     (
-                        spark.read.parquet(
-                            str(table.location / snap.delete_pos_dir)
-                        )
+                        spark.read.parquet(*table._paths(snap.files))
                         .select(
                             F.concat(
                                 F.lit(str(table.location) + "/"),
@@ -1624,13 +1622,11 @@ def read_iceberg_table(
         import pyarrow as _pa  # noqa: PLC0415
         import pyarrow.parquet as _pq  # noqa: PLC0415
 
-        import re as _re  # noqa: PLC0415
-
         for fp in files:
             # manifests from real writers record file: URIs — pyarrow
             # needs a local path (same normalization _default_groups'
             # footer probe applies; r16 review finding)
-            local = _re.sub("^file:/+", "/", str(fp))
+            local = _norm_file_path(fp)
             sch = _pq.ParquetFile(local).schema_arrow
             for c in variant_cols:
                 if c not in sch.names:
@@ -2006,11 +2002,10 @@ def read_iceberg_table(
         if not column_defaults:
             return [(files, set())]
         import pyarrow.parquet as pq  # noqa: PLC0415
-        import re as _re  # noqa: PLC0415
 
         groups: dict[frozenset, list] = {}
         for fp in files:
-            local = _re.sub("^file:/+", "/", str(fp))
+            local = _norm_file_path(fp)
             names = set(pq.read_schema(local).names)
             missing = frozenset(
                 c for c in column_defaults if c not in names

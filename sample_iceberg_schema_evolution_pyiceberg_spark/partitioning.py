@@ -13,10 +13,11 @@ Reference parity (no code copied):
 Spark-first realization: each partition field becomes a derived column
 ``_p_{name}`` computed by a Catalyst expression over the source column;
 writes ``partitionBy`` those columns (hive-style directories), and the
-scan layer rewrites predicates on the *source* column into predicates on
-the partition column so directory pruning kicks in without the user ever
-referencing partition columns — Iceberg's "hidden partitioning"
-contract, re-expressed with Spark's native partition discovery.
+commit manifest records each file's partition tuple. Scans prune on
+that tuple (``table_format._partition_value_may_match``) with the
+python twins below, so predicates on the *source* column skip files
+without the user ever referencing partition columns — Iceberg's
+"hidden partitioning" contract.
 """
 
 from __future__ import annotations
@@ -290,10 +291,11 @@ class PartitionField:
 
     def truncate_literal(self, value: Any) -> Any:
         """Map a source-column literal to its partition value (for
-        predicate rewriting). For the time transforms ``value`` is an
-        ISO date/timestamp string or a python datetime/date; for
-        ``truncate[W]`` an int or string; ``bucket[N]`` literals map
-        via ``iceberg_bucket_of`` (None when unhashable)."""
+        manifest partition-tuple pruning). For the time transforms
+        ``value`` is an ISO date/timestamp string or a python
+        datetime/date; for ``truncate[W]`` an int or string;
+        ``bucket[N]`` literals map via ``iceberg_bucket_of`` (None when
+        unhashable)."""
         if self.transform == "identity":
             return value
         base, p = self.base_transform, self.param
@@ -319,9 +321,6 @@ class PartitionSpec:
 
     def __bool__(self) -> bool:
         return bool(self.fields)
-
-    def partition_columns(self) -> list[str]:
-        return [f.partition_column for f in self.fields]
 
     def to_json(self) -> list[dict[str, Any]]:
         return [
@@ -412,52 +411,3 @@ def evolve_spec(old: PartitionSpec, new: PartitionSpec) -> PartitionSpec:
             for i, f in enumerate(new.fields)
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# Hidden-partitioning predicate rewrite (scan-side pruning)
-# ---------------------------------------------------------------------------
-
-
-def derive_pruning_predicate(
-    spec: PartitionSpec,
-    source_column: str,
-    op: str,
-    literal: Any,
-) -> Column | None:
-    """Rewrite ``source_column <op> literal`` into a predicate on the
-    hidden partition column so Spark prunes hive directories.
-
-    Sound because every order-preserving transform is monotone: for
-    ``t = trunc(x)``, ``x >= v  =>  t >= trunc(v)`` and
-    ``x <= v  =>  t <= trunc(v)``; equality implies partition
-    equality. ``bucket[N]`` is NOT order-preserving, so it rewrites
-    only hash-membership predicates (``=`` / ``IN``) and declines
-    ranges. The rewritten predicate is a *necessary* condition — the
-    original predicate is still applied to rows, the rewrite only
-    prunes files.
-    """
-    for f in spec.fields:
-        if f.source_column != source_column:
-            continue
-        is_bucket = f.base_transform == "bucket"
-        if is_bucket and op not in ("=", "==", "in"):
-            continue  # hash destroys order: ranges cannot prune
-        if op == "in":
-            # IN-list: partition must hold one of the truncated values
-            vals = [f.truncate_literal(v) for v in literal]
-            if any(v is None for v in vals):
-                continue  # an unmappable literal poisons the rewrite
-            return F.col(f.partition_column).isin(vals)
-        mapped = f.truncate_literal(literal)
-        if mapped is None:
-            continue
-        lit = F.lit(mapped)
-        pc = F.col(f.partition_column)
-        if op in ("=", "=="):
-            return pc == lit
-        if op in (">=", ">"):
-            return pc >= lit
-        if op in ("<=", "<"):
-            return pc <= lit
-    return None

@@ -166,12 +166,3 @@ def max_field_id(schema: T.StructType) -> int:
 
     walk(schema)
     return best
-
-
-def spark_ddl(schema: T.StructType) -> str:
-    """Schema as Spark DDL (for CREATE TABLE rendering / debugging)."""
-    return ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        + ("" if f.nullable else " NOT NULL")
-        for f in schema.fields
-    )

@@ -49,10 +49,6 @@ class SchemaChange:
     nest_level: int = 0
     messages: list[str] = dc_field(default_factory=list)
 
-    @property
-    def root_name(self) -> str:
-        return self.column_path.split(".", 1)[0]
-
     def data_type_change_allowed(self) -> tuple[bool, list[str]]:
         """Pre-flight legality of this change (reference computes but only
         logs this — iceberg_helper.py:297-299; we enforce)."""

@@ -130,6 +130,50 @@ def broadcast_threshold_bytes(heap: str) -> int:
     return min(64 * 1024 * 1024, parse_mem_bytes(heap) // 256)
 
 
+def semantic_confs(input_bytes: int, heap: str) -> list[tuple[str, str]]:
+    """The semantics-bearing confs (oracle parity, input-sized plans)
+    every engine session carries: ``get_spark`` builds them in, and
+    ``sources.ensure_session_confs`` sets them on a session the driver
+    built without this factory. ``input_bytes`` is the declared input
+    (0: none declared), ``heap`` the driver memory."""
+    return [
+        # testdata events.parquet carries TIMESTAMP(NANOS); Spark has no
+        # nanos timestamp — read as long, converted in sources.load_table
+        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+        ("spark.sql.parquet.inferTimestampNTZ.enabled", "true"),
+        ("spark.sql.session.timeZone", "UTC"),
+        # AQE is input-sized: on for any real input (100 TB posture —
+        # skew-join splits, runtime coalescing), off below 64 MB where
+        # its per-exchange re-plan round trip is pure fixed cost (see
+        # adaptive_enabled). No declared input -> on (the safe default).
+        (
+            "spark.sql.adaptive.enabled",
+            str(not input_bytes or adaptive_enabled(input_bytes)).lower(),
+        ),
+        # testdata ships one parquet file per table (split-cache files
+        # are ~0.5 MB); split small files so scans parallelize (at
+        # cluster scale inputs have thousands of splits and 128m is
+        # right — these are local-bench values)
+        ("spark.sql.files.maxPartitionBytes", "2m"),
+        ("spark.sql.files.openCostInBytes", "512k"),
+        # heap-scaled (see broadcast_threshold_bytes): kills the
+        # orders-side shuffle in the star joins; 100 TB fact sides
+        # never qualify
+        (
+            "spark.sql.autoBroadcastJoinThreshold",
+            str(broadcast_threshold_bytes(heap)),
+        ),
+        # bucketed fact scans are written one sorted file per bucket;
+        # expose that ordering so sort-merge joins on the bucket key
+        # skip both the exchange AND the sort
+        ("spark.sql.legacy.bucketedTableScan.outputOrdering", "true"),
+        # 4x the default vectorized-reader batch: fewer per-batch
+        # transitions in wide aggregates (measured ~5% on b12 at sf10;
+        # neutral elsewhere — see SCALE.md b12 profile)
+        ("spark.sql.parquet.columnarReaderBatchSize", "16384"),
+    ]
+
+
 def get_spark(
     app_name: str = "sample-iceberg-schema-evolution-spark",
     master: str | None = None,
@@ -157,16 +201,11 @@ def get_spark(
             if nbytes
             else DEFAULT_SHUFFLE_PARTITIONS
         )
-    # AQE is input-sized too: on for any real input (100 TB posture —
-    # skew-join splits, runtime coalescing), off below 64 MB where its
-    # per-exchange re-plan round trip is pure fixed cost (see
-    # adaptive_enabled). No declared input -> on (the safe default).
-    aqe = str(adaptive_enabled(nbytes) if nbytes else True).lower()
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.adaptive.enabled", aqe)
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # Spark's own recommendation: respect the advisory target when
         # coalescing instead of maximizing parallelism — tiny reduce
@@ -179,42 +218,14 @@ def get_spark(
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-        # testdata events.parquet carries TIMESTAMP(NANOS); Spark has no
-        # nanos timestamp — read as long, converted in sources.load_table
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # testdata ships one parquet file per table; split small files
-        # so scans parallelize (at cluster scale inputs have thousands
-        # of splits and 128m is right — these are local-bench values)
-        .config("spark.sql.files.maxPartitionBytes", "2m")
-        .config("spark.sql.files.openCostInBytes", "512k")
-        # dims under 64 MB broadcast; 100 TB fact sides never qualify
-        # heap-scaled: see broadcast_threshold_bytes (100 TB fact
-        # sides never qualify regardless)
-        .config(
-            "spark.sql.autoBroadcastJoinThreshold",
-            str(
-                broadcast_threshold_bytes(
-                    os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-                )
-            ),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
-        # bucketed fact scans are written one sorted file per bucket;
-        # expose that ordering so sort-merge joins on the bucket key
-        # skip both the exchange AND the sort
-        .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-        # 4x the default vectorized-reader batch: fewer per-batch
-        # transitions in wide aggregates (measured ~5% on b12 at sf10)
-        .config("spark.sql.parquet.columnarReaderBatchSize", "16384")
         # factory-built sessions are fully configured: mark the
         # sentinel so sources.ensure_session_confs (the safety net for
         # DRIVER-handed sessions) never overrides an explicit setting
         # made here or via extra_conf
         .config("spark.graft.confed", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in semantic_confs(nbytes, mem) + [*(extra_conf or {}).items()]:
         b = b.config(k, v)
     return b.getOrCreate()

@@ -1,5 +1,5 @@
-"""Source readers (SURVEY B1-B5): parquet testdata tables, schema'd
-CSV/JSON, binary files, and lake-format tables."""
+"""Source readers (SURVEY B1-B5): parquet testdata tables, their
+split cache and bucketed layouts, and the session confs they need."""
 
 from __future__ import annotations
 
@@ -10,12 +10,10 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from sample_iceberg_schema_evolution_pyiceberg_spark.session import (
-    adaptive_enabled,
-    broadcast_threshold_bytes,
     declared_input_bytes,
+    semantic_confs,
 )
 
 TESTDATA_TABLES = (
@@ -123,46 +121,8 @@ def ensure_session_confs(spark: SparkSession) -> None:
             return
     except Exception:  # noqa: BLE001
         pass
-    _nbytes = declared_input_bytes()
-    for k, v in (
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.parquet.inferTimestampNTZ.enabled", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-        # input-sized AQE gate (session.adaptive_enabled): on for real
-        # inputs (skew-join splits, runtime coalescing — the 100 TB
-        # posture), off below 64 MB where the per-exchange re-plan
-        # round trip is pure fixed cost (+30% wall measured at sf0.1,
-        # tools/aqe_experiment.py r10)
-        (
-            "spark.sql.adaptive.enabled",
-            str(adaptive_enabled(_nbytes) if _nbytes else True).lower(),
-        ),
-        # local-bench split sizing: the split-cache files are ~0.5 MB, so
-        # pack at 2 MB to keep one split per core (cluster deployments
-        # keep Spark's 128 MB default — inputs there have real splits)
-        ("spark.sql.files.maxPartitionBytes", "2m"),
-        ("spark.sql.files.openCostInBytes", "512k"),
-        # heap-scaled broadcast threshold (the 100 TB fact side never
-        # qualifies); kills the orders-side shuffle in the star joins
-        # while keeping the worst-case hash relation (~25x the pruned-
-        # compressed estimate) under ~10% of the heap — see
-        # session.broadcast_threshold_bytes
-        (
-            "spark.sql.autoBroadcastJoinThreshold",
-            str(
-                broadcast_threshold_bytes(
-                    spark.conf.get("spark.driver.memory", "8g")
-                )
-            ),
-        ),
-        # bucketed fact scans (bucketed_table below) are written one
-        # sorted file per bucket; expose that ordering so sort-merge
-        # joins on the bucket key skip both the exchange AND the sort
-        ("spark.sql.legacy.bucketedTableScan.outputOrdering", "true"),
-        # 4x the default vectorized-reader batch: fewer per-batch
-        # transitions in wide aggregates (measured ~5% on the Q1-shaped
-        # b12 at sf10; neutral elsewhere — see SCALE.md b12 profile)
-        ("spark.sql.parquet.columnarReaderBatchSize", "16384"),
+    for k, v in semantic_confs(
+        declared_input_bytes(), spark.conf.get("spark.driver.memory", "8g")
     ):
         try:
             spark.conf.set(k, v)
@@ -394,22 +354,3 @@ def bucketed_table(
             stacklevel=2,
         )
         return base
-
-
-def read_json(spark: SparkSession, path: str, schema: T.StructType | str) -> DataFrame:
-    """Schema'd JSON scan (B5) — explicit schema, no inference pass
-    (inference is a full extra read at 100 TB)."""
-    return spark.read.schema(schema).json(path)
-
-
-def read_csv(
-    spark: SparkSession, path: str, schema: T.StructType | str, header: bool = True
-) -> DataFrame:
-    """Schema'd CSV scan (B5)."""
-    return spark.read.schema(schema).option("header", header).csv(path)
-
-
-def read_binary_files(spark: SparkSession, path: str) -> DataFrame:
-    """Binary-file source (C5 multimodal): path, modificationTime,
-    length, content:binary."""
-    return spark.read.format("binaryFile").load(path)

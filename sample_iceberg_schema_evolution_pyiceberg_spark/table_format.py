@@ -53,11 +53,14 @@ Per-snapshot mapping: snapshot_id -> snapshot-id, sequence_number ->
 sequence-number, timestamp_ms -> timestamp-ms, operation ->
 summary.operation, schema_version -> schema-id, spec_id ->
 partition-spec-id (*ext* — the spec records the spec in manifests),
-data_dir -> data-dir (*ext* — stands in for manifest-list; this format
-tracks a directory per snapshot, not manifest files).
+data_dir -> data-dir (*ext* — the directory the entry's files were
+written under), files -> manifest (*ext* — the entry's file list, kept
+inline instead of in manifest files).
 - each append = one snapshot = one directory ``data/snap-{id}/`` written
-  by ``df.write.partitionBy(_p_*)`` (hive-style dirs -> Spark partition
-  discovery prunes them).
+  by ``df.write.partitionBy(_p_*)`` (hive-style dirs); the commit
+  manifest lists its files with stats and partition tuple, and every
+  scan reads exactly the listed files — pruned on those stats and
+  tuples, never on a directory listing.
 - schema evolution rewrites **metadata only**; old data files are
   reconciled to the current schema at scan time by a name-based
   recursive alignment (add -> null-fill, type update -> cast, reorder ->
@@ -65,8 +68,8 @@ tracks a directory per snapshot, not manifest files).
   matching the reference's name-keyed diff semantics
   (``iceberg_helper.py:254-295``).
 
-Scale posture: scans build one DataFrame per (schema_version, spec_id)
-group — a bounded, metadata-sized number — and union them; all row work
+Scale posture: scans build one DataFrame per live data entry (a
+manifest fold expands to its sources) and union them; all row work
 stays in Catalyst (casts/struct rebuilds are codegen'd, no Python row
 path). Appends never list old data; scans never touch the driver beyond
 metadata JSON.
@@ -94,7 +97,6 @@ from .partitioning import (
     PARTITION_COL_PREFIX,
     PartitionField,
     PartitionSpec,
-    derive_pruning_predicate,
     spark_bucket_of,
 )
 
@@ -1531,11 +1533,10 @@ class LakeTable:
         the merge-on-read delete entries whose masks apply to them.
         The sources keep their ORIGINAL (smaller) sequence numbers, so
         a mask committed after the fold still applies to them and row
-        lineage resolves to them; hive discovery, per-version schema
-        alignment, spec pruning and bucket adoption keep their
-        per-source behavior. ONE walk for the scan, the lineage read,
-        the lineage carry decision and the export, so none of them can
-        diverge."""
+        lineage resolves to them; per-version schema alignment, spec
+        pruning and bucket adoption keep their per-source behavior. ONE
+        walk for the scan, the lineage read, the lineage carry decision
+        and the export, so none of them can diverge."""
         deletes = [s for s in snaps if s.is_row_delete]
         datas = [s for s in snaps if not s.is_row_delete]
         if any(s.source_snapshots for s in datas):
@@ -3017,7 +3018,7 @@ class LakeTable:
             str(self.location / keys_rel)
         )
         keys_manifest = self._collect_manifest(keys_rel)
-        keys_df = spark.read.parquet(str(self.location / keys_rel))
+        keys_df = spark.read.parquet(*self._paths(keys_manifest))
         if (
             sum(f["size_bytes"] for f in keys_manifest)
             <= _BROADCAST_KEYFILE_MAX_BYTES
@@ -3269,7 +3270,7 @@ class LakeTable:
         if len(pos_snaps) < 2:
             return None
         merged = spark.read.parquet(
-            *[str(self.location / s.delete_pos_dir) for s in pos_snaps]
+            *self._paths([f for s in pos_snaps for f in s.files])
         ).dropDuplicates(["file_path", "pos"]).sort("file_path", "pos")
         pos_rel = f"data/pos-{uuid.uuid4().hex[:16]}"
         merged.coalesce(1).write.mode("error").parquet(
@@ -3676,23 +3677,29 @@ class LakeTable:
         committed metadata (live or history) — debris from writes whose
         metadata commit never landed, or from an expire_snapshots
         interrupted between commit and delete. Committed metadata is
-        the source of truth, exactly as in Iceberg. Run it only with no
-        writer in flight (the reference's Lambda is single-writer —
-        handler.py orchestration; a production deployment adds an
-        age filter before deleting). Returns removed relative paths.
+        the source of truth, exactly as in Iceberg: the referenced set
+        comes from a fresh load of it, together with this handle's own
+        entries, so a stale handle never deletes what another handle
+        committed since it loaded. Run it only with no writer in flight
+        (the reference's Lambda is single-writer — handler.py
+        orchestration; a production deployment adds an age filter
+        before deleting). Returns removed relative paths.
         """
-        all_entries = (
-            self.meta["snapshots"]
-            + self.meta.get("snapshot_history", [])
+        referenced = {
+            d
+            for meta in (
+                self.meta,
+                LakeTable.load(self.location, io=self.io).meta,
+            )
+            for s in meta["snapshots"]
+            + meta.get("snapshot_history", [])
             # staging branches reference their unpublished dirs too
             + [
                 s
-                for b in (self.meta.get("branches") or {}).values()
+                for b in (meta.get("branches") or {}).values()
                 for s in b["snapshots"]
             ]
-        )
-        referenced = {
-            d for s in all_entries for d in Snapshot.from_json(s).dirs
+            for d in Snapshot.from_json(s).dirs
         }
         removed: list[str] = []
         data_root = self.location / "data"
@@ -4237,6 +4244,13 @@ class LakeTable:
 
     # -- read path ---------------------------------------------------------
 
+    def _paths(self, files: list[dict[str, Any]]) -> list[str]:
+        """The absolute, de-duplicated, sorted paths of manifest
+        ``files`` — the only input of a Spark read of table data or a
+        delete mask (no directory root, so nothing the manifest does not
+        list is ever scanned, and a path listed twice is read once)."""
+        return sorted({str(self.location / f["path"]) for f in files})
+
     def _apply_delete(
         self,
         spark: SparkSession,
@@ -4261,14 +4275,11 @@ class LakeTable:
             if how == "left_semi":
                 return df.filter(d.delete_predicate)
             return df.filter(f"NOT ({d.delete_predicate})")
-        if d.delete_pos_dir:
-            mask = spark.read.parquet(str(self.location / d.delete_pos_dir))
-        else:
+        mask = spark.read.parquet(*self._paths(d.files))
+        if not d.delete_pos_dir:
             # align key types to the current schema (the key file was
             # written pre-promotion)
-            mask = spark.read.parquet(
-                str(self.location / d.delete_keys_dir)
-            ).select(
+            mask = mask.select(
                 *[
                     F.col(c).cast(cur[c].dataType).alias(c)
                     for c in d.delete_key_cols
@@ -4300,8 +4311,8 @@ class LakeTable:
         """Scan the table aligned to the current schema.
 
         ``pruning`` is an optional list of ``(source_col, op, literal)``
-        simple predicates; each is rewritten onto hidden partition
-        columns (directory pruning) AND applied to rows. Arbitrary
+        simple predicates; each prunes manifest files (column stats and
+        partition tuple) AND is applied to rows. Arbitrary
         further filtering composes on the returned DataFrame as usual.
 
         ``as_of_snapshot`` time-travels: scan the table as of (and
@@ -4391,202 +4402,155 @@ class LakeTable:
             + (pos_fields if _with_positions else [])
             + (lin_fields if _with_lineage_cols else [])
         )
-        if not datas:
-            return spark.createDataFrame([], out_schema)
-        groups: dict[tuple[int, int], list[Snapshot]] = {}
-        for s in datas:
-            groups.setdefault((s.schema_version, s.spec_id), []).append(s)
         parts: list[DataFrame] = []
-        for (_, sid), group in sorted(groups.items()):
-            spec = self.spec_at(sid)
-            for s in group:
-                # manifest-level file pruning (Iceberg's scan
-                # planning): with simple predicates and commit-time
-                # stats on record, drop FILES whose [min,max] bounds
-                # prove no row can match — before Spark ever schedules
-                # them. Driver-side, O(#files-in-manifest) dict
-                # lookups; at cluster scale this is the step that turns
-                # a 100 TB scan into its matching partitions' files.
-                keep_paths: list[str] | None = None
-                if pruning:
+        for s in sorted(datas, key=lambda s: (s.schema_version, s.spec_id)):
+            spec = self.spec_at(s.spec_id)
+            # manifest-level file pruning (Iceberg's scan planning):
+            # with simple predicates and commit-time stats on record,
+            # drop FILES whose [min,max] bounds or partition tuple prove
+            # no row can match — before Spark ever schedules them.
+            # Driver-side, O(#files-in-manifest) dict lookups; at
+            # cluster scale this is the step that turns a 100 TB scan
+            # into its matching partitions' files.
 
-                    def _keep(f: dict) -> bool:
-                        for (col, op, lit) in pruning:
-                            if not _file_may_match(
-                                f.get("stats") or {}, col, op, lit
-                            ):
-                                return False
-                            # manifest partition tuple (Iceberg's
-                            # per-file partition values): bucket
-                            # hash-membership + transform-value skips
-                            pv = f.get("partition") or {}
-                            is_spark = f.get("layout") == "spark-bucket"
-                            for fld in spec.fields:
-                                if (
-                                    fld.source_column != col
-                                    or fld.name not in pv
-                                ):
-                                    continue
-                                slf = (
-                                    fld
-                                    if is_spark
-                                    and fld.base_transform == "bucket"
-                                    else None
-                                )
-                                if not _partition_value_may_match(
-                                    fld, pv[fld.name], op, lit, slf
-                                ):
-                                    return False
-                        return True
-
-                    kept = [f for f in s.files if _keep(f)]
-                    if not kept:
-                        continue  # whole arm provably empty
-                    if len(kept) < len(s.files):
-                        keep_paths = [
-                            str(self.location / f["path"]) for f in kept
-                        ]
-                # one read per snapshot dir: hive-partition extraction
-                # needs each dir as its own discovery root (a multi-path
-                # read over sibling snap-* dirs raises
-                # CONFLICTING_DIRECTORY_STRUCTURES). The union is
-                # metadata-sized (one arm per snapshot) and Catalyst
-                # folds the arms into one scan stage.
-                if keep_paths is not None:
-                    # explicit surviving files; basePath keeps hive
-                    # partition-column extraction working
-                    df = spark.read.option(
-                        "basePath", str(self.location / s.data_dir)
-                    ).parquet(*keep_paths)
-                else:
-                    df = None
-                    if not need_pos and not _with_lineage_cols:
-                        # (lineage reads skip adoption too: the adopted
-                        # catalog schema is the TABLE schema, which
-                        # would hide physically materialized lineage
-                        # columns and silently fall back to positional
-                        # ids — a plain parquet read sees them)
-                        # Spark-bucket-layout snapshots scan through a
-                        # catalog adoption so Catalyst SEES the bucket
-                        # co-location: joins on the bucket key schedule
-                        # with no exchange, and key-equality filters
-                        # get Spark's own (sound: same hash) bucket
-                        # pruning. Plain parquet fallback is value-
-                        # identical — bucket files are ordinary parquet.
-                        df = self._adopt_bucketed_scan(spark, s)
-                    if df is None:
-                        df = spark.read.parquet(
-                            str(self.location / s.data_dir)
-                        )
-                # hidden-partition pruning for this group's spec; a
-                # Spark-bucket-layout snapshot has NO _p_ dir column
-                # for its bucket field (the id lives in file names and
-                # prunes at manifest level above), so exclude it from
-                # the directory rewrite
-                dspec = spec
-                if any(
-                    f.get("layout") == "spark-bucket"
-                    for f in s.files
-                ):
-                    dspec = PartitionSpec(
-                        tuple(
-                            pf
-                            for pf in spec.fields
-                            if pf.base_transform != "bucket"
-                        )
-                    )
+            def _keep(f: dict) -> bool:
                 for (col, op, lit) in pruning or []:
-                    pred = derive_pruning_predicate(dspec, col, op, lit)
-                    if pred is not None:
-                        df = df.filter(pred)
-                if need_pos:
-                    # capture each row's (relative file, ordinal)
-                    # address BEFORE alignment drops metadata access.
-                    # The relative path comes from an EXPLICIT prefix
-                    # match against the location (as-declared and
-                    # fs-resolved, covering symlinked locations); a
-                    # file outside both prefixes fails LOUDLY instead
-                    # of silently minting addresses no delete file can
-                    # ever match.
-                    cands: list[str] = []
-                    for c in (
-                        str(self.location),
-                        str(Path(self.location).resolve()),
+                    if not _file_may_match(
+                        f.get("stats") or {}, col, op, lit
                     ):
-                        if c not in cands:
-                            cands.append(c)
-                    norm = (
-                        "regexp_replace(_metadata.file_path, "
-                        "'^file:/+', '/')"
-                    )
-                    arms = " ".join(
-                        "WHEN startswith({n}, '{p}/') "
-                        "THEN substring({n}, {off})".format(
-                            n=norm,
-                            p=c.replace("'", "\\'"),
-                            off=len(c) + 2,
+                        return False
+                    # manifest partition tuple (Iceberg's per-file
+                    # partition values): bucket hash-membership +
+                    # transform-value skips
+                    pv = f.get("partition") or {}
+                    is_spark = f.get("layout") == "spark-bucket"
+                    for fld in spec.fields:
+                        if fld.source_column != col or fld.name not in pv:
+                            continue
+                        slf = (
+                            fld
+                            if is_spark and fld.base_transform == "bucket"
+                            else None
                         )
-                        for c in cands
-                    )
-                    df = df.select(
-                        "*",
-                        F.expr(
-                            f"CASE {arms} ELSE raise_error(concat("
-                            "'data file outside table location: ', "
-                            f"{norm})) END"
-                        ).alias("_pos_file"),
-                        F.col("_metadata.row_index").alias("_pos_index"),
-                    )
-                if _with_lineage_cols:
-                    # physically materialized lineage (a43): a
-                    # lineage-carrying rewrite wrote _row_id /
-                    # _last_updated_sequence_number into its data
-                    # files; surface them (nulls when this file
-                    # predates materialization — positional fallback)
-                    for src, dst in (
-                        ("_row_id", "_mat_row_id"),
-                        ("_last_updated_sequence_number", "_mat_seq"),
-                    ):
-                        df = df.withColumn(
-                            dst,
-                            F.col(src).cast("long")
-                            if src in df.columns
-                            else F.lit(None).cast("long"),
-                        )
-                df = self._as_current(
-                    df,
-                    s,
-                    keep=(
-                        (["_pos_file", "_pos_index"] if need_pos else [])
-                        + (
-                            ["_mat_row_id", "_mat_seq"]
-                            if _with_lineage_cols
-                            else []
-                        )
-                    )
-                    or None,
+                        if not _partition_value_may_match(
+                            fld, pv[fld.name], op, lit, slf
+                        ):
+                            return False
+                return True
+
+            files = [f for f in s.files if _keep(f)]
+            if not files:
+                continue  # whole arm provably empty
+            # one read per data entry, of exactly the files its
+            # manifest lists; Catalyst folds the arms into one scan
+            df = None
+            if (
+                len(files) == len(s.files)
+                and not need_pos
+                and not _with_lineage_cols
+            ):
+                # (lineage reads skip adoption too: the adopted
+                # catalog schema is the TABLE schema, which would hide
+                # physically materialized lineage columns and silently
+                # fall back to positional ids — a plain parquet read
+                # sees them)
+                # Spark-bucket-layout snapshots scan through a catalog
+                # adoption so Catalyst SEES the bucket co-location:
+                # joins on the bucket key schedule with no exchange,
+                # and key-equality filters get Spark's own (sound: same
+                # hash) bucket pruning. The file read is value-
+                # identical — bucket files are ordinary parquet.
+                df = self._adopt_bucketed_scan(spark, s)
+            if df is None:
+                df = spark.read.parquet(*self._paths(files))
+            if need_pos:
+                # capture each row's (relative file, ordinal)
+                # address BEFORE alignment drops metadata access.
+                # The relative path comes from an EXPLICIT prefix
+                # match against the location (as-declared and
+                # fs-resolved, covering symlinked locations); a
+                # file outside both prefixes fails LOUDLY instead
+                # of silently minting addresses no delete file can
+                # ever match.
+                cands: list[str] = []
+                for c in (
+                    str(self.location),
+                    str(Path(self.location).resolve()),
+                ):
+                    if c not in cands:
+                        cands.append(c)
+                norm = (
+                    "regexp_replace(_metadata.file_path, "
+                    "'^file:/+', '/')"
                 )
-                # masks from LATER delete snapshots apply to this
-                # snapshot's rows (post-alignment: predicates and key
-                # columns are named in current-schema terms); appends
-                # after a delete are untouched — standard SQL DELETE
-                # visibility.
-                for d in deletes:
-                    if d.sequence_number > s.sequence_number:
-                        df = self._apply_delete(
-                            spark, df, d, cur, "left_anti"
-                        )
-                if need_pos and not _with_positions:
-                    df = df.drop("_pos_file", "_pos_index")
-                parts.append(df)
+                arms = " ".join(
+                    "WHEN startswith({n}, '{p}/') "
+                    "THEN substring({n}, {off})".format(
+                        n=norm,
+                        p=c.replace("'", "\\'"),
+                        off=len(c) + 2,
+                    )
+                    for c in cands
+                )
+                df = df.select(
+                    "*",
+                    F.expr(
+                        f"CASE {arms} ELSE raise_error(concat("
+                        "'data file outside table location: ', "
+                        f"{norm})) END"
+                    ).alias("_pos_file"),
+                    F.col("_metadata.row_index").alias("_pos_index"),
+                )
+            if _with_lineage_cols:
+                # physically materialized lineage (a43): a
+                # lineage-carrying rewrite wrote _row_id /
+                # _last_updated_sequence_number into its data
+                # files; surface them (nulls when this file
+                # predates materialization — positional fallback)
+                for src, dst in (
+                    ("_row_id", "_mat_row_id"),
+                    ("_last_updated_sequence_number", "_mat_seq"),
+                ):
+                    df = df.withColumn(
+                        dst,
+                        F.col(src).cast("long")
+                        if src in df.columns
+                        else F.lit(None).cast("long"),
+                    )
+            df = self._as_current(
+                df,
+                s,
+                keep=(
+                    (["_pos_file", "_pos_index"] if need_pos else [])
+                    + (
+                        ["_mat_row_id", "_mat_seq"]
+                        if _with_lineage_cols
+                        else []
+                    )
+                )
+                or None,
+            )
+            # masks from LATER delete snapshots apply to this
+            # snapshot's rows (post-alignment: predicates and key
+            # columns are named in current-schema terms); appends
+            # after a delete are untouched — standard SQL DELETE
+            # visibility.
+            for d in deletes:
+                if d.sequence_number > s.sequence_number:
+                    df = self._apply_delete(
+                        spark, df, d, cur, "left_anti"
+                    )
+            if need_pos and not _with_positions:
+                df = df.drop("_pos_file", "_pos_index")
+            parts.append(df)
         if not parts:
-            # every arm pruned away by manifest bounds: provably empty
+            # no data entry, or every arm pruned away by the manifest
             return spark.createDataFrame([], out_schema)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        # row-level application of the pruning predicates (rewrite is only
-        # a necessary condition at file granularity)
+        # row-level application of the pruning predicates (manifest
+        # pruning is only a necessary condition at file granularity)
         for (col, op, lit) in pruning or []:
             if op == "in":
                 out = out.filter(F.col(col).isin(list(lit)))
@@ -4850,7 +4814,7 @@ class LakeTable:
         which refuses rewrite-crossing ranges), every snapshot kind is
         servable. Per-commit emission and cost:
 
-        - ``append`` — inserts from the commit's data dir. Cost
+        - ``append`` — inserts from the commit's manifest files. Cost
           proportional to the delta (never to table size).
         - merge-on-read predicate DELETE — deletes = the pre-state
           filtered by the stored predicate: exactly the complement of
@@ -4940,11 +4904,12 @@ class LakeTable:
         for ordinal, i in enumerate(range(lo + 1, hi + 1)):
             s = hist[i]
             if s.operation == "append":
-                df = spark.read.parquet(str(self.location / s.data_dir))
-                parts.append(
-                    _tag(self._as_current(df, s), ordinal, s.snapshot_id,
-                         "insert")
-                )
+                if s.files:
+                    df = spark.read.parquet(*self._paths(s.files))
+                    parts.append(
+                        _tag(self._as_current(df, s), ordinal,
+                             s.snapshot_id, "insert")
+                    )
             elif s.is_row_delete:
                 # the pre-state rows the entry masks: semi-join instead
                 # of the scan's anti-join; position deletes need each

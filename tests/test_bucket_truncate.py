@@ -12,9 +12,7 @@ from pyspark.sql import types as T
 
 from sample_iceberg_schema_evolution_pyiceberg_spark.partitioning import (
     PartitionField,
-    PartitionSpec,
     compile_partition_spec,
-    derive_pruning_predicate,
     iceberg_bucket_of,
     murmur3_32,
     spark_bucket_of,
@@ -107,14 +105,19 @@ def test_bucket_string_udf_matches_twin(spark):
 
 
 def test_bucket_prunes_equality_only():
-    spec = PartitionSpec(
-        (PartitionField("k", "bucket[8]", "k_bucket", 1000),)
+    b = PartitionField("k", "bucket[8]", "k_bucket", 1000)
+    # = / IN: a file in a bucket no literal hashes to is skipped
+    eq_other = str((iceberg_bucket_of(42, 8) + 1) % 8)
+    assert not _partition_value_may_match(b, eq_other, "=", 42)
+    in_other = next(
+        v for v in range(8)
+        if v not in (iceberg_bucket_of(1, 8), iceberg_bucket_of(2, 8))
     )
-    assert derive_pruning_predicate(spec, "k", "=", 42) is not None
-    assert derive_pruning_predicate(spec, "k", "in", [1, 2]) is not None
-    # hash destroys order: ranges must NOT rewrite
-    assert derive_pruning_predicate(spec, "k", ">=", 42) is None
-    assert derive_pruning_predicate(spec, "k", "<", 42) is None
+    assert not _partition_value_may_match(b, str(in_other), "in", [1, 2])
+    # hash destroys order: ranges never prune, whatever the bucket
+    for v in range(8):
+        assert _partition_value_may_match(b, str(v), ">=", 42)
+        assert _partition_value_may_match(b, str(v), "<", 42)
 
 
 def test_partition_value_match_bucket_and_truncate():

@@ -158,3 +158,38 @@ def test_manifest_bounds_export_and_stream(spark, tmp_path):
     assert sorted(r["k"] for r in back.collect()) == list(range(40))
     streamed = _stream_rows(spark, t, tmp_path, "stray")
     assert sorted(r[0] for r in streamed) == list(range(40))
+
+
+def test_manifest_bounds_every_table_scan(spark, tmp_path):
+    """The same stray file is not part of the table for a Spark scan
+    either: ``files_df``, ``to_df`` and ``changelog_between`` all see
+    the manifest's 40 rows, so ``compact()`` (which rewrites exactly
+    the listed files) leaves the visible row count unchanged."""
+    cat = LakeCatalog(tmp_path / "wh")
+    t = cat.create_table("db", "stray_scan", _src(spark, 0, 1).schema)
+    snap = t.append(_src(spark, 0, 40).repartition(4))
+    written = sorted((t.location / snap.data_dir).rglob("*.parquet"))
+    assert len(written) == 4
+    shutil.copy(
+        written[0], written[0].with_name("part-99999-stray.snappy.parquet")
+    )
+    assert sum(r["record_count"] for r in t.files_df(spark).collect()) == 40
+    assert t.to_df(spark).count() == 40
+    assert t.changelog_between(spark).count() == 40
+    t.compact(spark)
+    assert t.to_df(spark).count() == 40
+
+
+def test_empty_partitioned_append_scans(spark, tmp_path):
+    """An append of no rows to a partitioned table commits an entry
+    with an empty manifest; scans and the changelog read it as no
+    rows instead of failing to infer a schema from an empty dir."""
+    cat = LakeCatalog(tmp_path / "wh")
+    spec = compile_partition_spec({"partitions": [{"column_name": "g"}]})
+    t = cat.create_table(
+        "db", "empty", _src(spark, 0, 1).schema, partition_spec=spec
+    )
+    t.append(_src(spark, 0, 10))
+    assert t.append(_src(spark, 0, 10).filter("k < 0")).files == []
+    assert t.to_df(spark).count() == 10
+    assert t.changelog_between(spark).count() == 10

@@ -249,7 +249,7 @@ def test_position_update_via_sql(spark, catalog, tmp_path):
 
 
 def test_position_mask_composes_with_manifest_pruning(spark, catalog):
-    """Pruned scans (explicit surviving-file reads with basePath) must
+    """Pruned scans (reads of the surviving manifest files only) must
     still capture (file, ordinal) addresses and apply the position
     mask — the two scan-planning features compose."""
     table, df = _mk(spark, catalog, "prune")

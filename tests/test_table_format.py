@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from sample_iceberg_schema_evolution_pyiceberg_spark.table_format import (
     LakeCatalog,
+    LakeTable,
     TableFormatError,
 )
 
@@ -234,6 +235,19 @@ def test_remove_orphan_files(spark, catalog):
     # committed data untouched
     assert table.to_df(spark).count() == 100
     assert table.remove_orphan_files() == []  # idempotent
+
+
+def test_remove_orphan_files_from_stale_handle(spark, catalog):
+    """A handle loaded before another handle's append must not reap
+    the dir that append committed: the referenced set includes the
+    committed metadata, not only the stale handle's entries."""
+    table, df = _mk(spark, catalog, "orph_stale")
+    table.append(df)
+    a = LakeTable.load(table.location)
+    b = LakeTable.load(table.location)
+    b.append(df)
+    assert a.remove_orphan_files() == []
+    assert LakeTable.load(table.location).to_df(spark).count() == 200
 
 
 def test_plain_overwrite_keeps_history(spark, catalog):
@@ -613,9 +627,9 @@ def test_metadata_metrics_selectors(spark, tmp_path):
 
 
 def test_scan_pruning_composes_with_hidden_partitions(spark, tmp_path):
-    """File bounds + hidden-partition directory pruning on the same
-    scan: identical rows to the unpruned filter, and the basePath
-    explicit-file read keeps partition-column extraction intact."""
+    """File bounds + manifest partition-tuple pruning on the same
+    scan: identical rows to the unpruned filter, and the read of the
+    surviving manifest files keeps the partition source columns."""
     from pyspark.sql import functions as F
 
     from sample_iceberg_schema_evolution_pyiceberg_spark.partitioning import (
