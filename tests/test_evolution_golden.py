@@ -203,6 +203,11 @@ def test_hidden_partition_pruning(spark, catalog):
     full = t.to_df(spark)
     expected = full.filter("order_time >= '2023-01-01'").count()
     assert pruned.count() == expected
-    # the pruning predicate must hit the hive partition column in the plan
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "_p_order_time_year" in plan
+    # the pruning predicate must skip the files of earlier year
+    # partitions (manifest partition-tuple pruning)
+    assert sorted(pruned.inputFiles()) == sorted(
+        f
+        for f in full.inputFiles()
+        if f.split("_p_order_time_year=")[1][:4] >= "2023"
+    )
+    assert len(pruned.inputFiles()) < len(full.inputFiles())
