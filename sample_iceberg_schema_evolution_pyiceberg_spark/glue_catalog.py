@@ -38,7 +38,6 @@ Glue-catalog read path real engines use).
 
 from __future__ import annotations
 
-import json
 from pathlib import Path
 from typing import Any
 
@@ -267,11 +266,7 @@ class GlueLakeCatalog:
             (entry.get("StorageDescriptor") or {}).get("Location")
             or self._inner._table_dir(database, table)
         )
-        doc = json.loads(self.io.read_text(meta_path))
-        from .table_format import _meta_from_spec  # noqa: PLC0415
-
-        t = LakeTable(loc, _meta_from_spec(doc), io=self.io)
-        t.loaded_from = meta_path
+        t = LakeTable.from_metadata(loc, meta_path, self.io)
         self._attach(t, database, table)
         return t
 

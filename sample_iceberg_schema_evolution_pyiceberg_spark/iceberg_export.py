@@ -1294,8 +1294,9 @@ def export_to_iceberg(
     version = (
         int(hint_file.read_text().strip()) + 1 if hint_file.exists() else 1
     )
+    # compact, as Iceberg Java writes it (and on CPython's C encoder)
     (meta_dir / f"v{version}.metadata.json").write_text(
-        json.dumps(doc, indent=1)
+        json.dumps(doc, separators=(",", ":"))
     )
     hint_file.write_text(str(version))
     return meta_dir

@@ -1282,22 +1282,27 @@ class LakeTable:
 
     # -- metadata ----------------------------------------------------------
 
+    @classmethod
+    def from_metadata(
+        cls, location: str | Path, metadata_path: str, io: FileIO
+    ) -> "LakeTable":
+        """Open the table from one metadata document (any JSON layout)."""
+        doc = json.loads(io.read_text(metadata_path))
+        t = cls(location, _meta_from_spec(doc), io=io)
+        t.loaded_from = metadata_path
+        return t
+
     @staticmethod
     def load(location: str | Path, io: FileIO | None = None) -> "LakeTable":
         io = io or LocalFileIO()
         location = Path(location)
         if isinstance(io, LocalFileIO) and not location.is_absolute():
             location = location.resolve()  # same rule as LakeCatalog
-        hint = io.read_text(
-            str(location / "_meta" / "version-hint.text")
-        ).strip()
-        meta_file = str(location / "_meta" / _hint_to_filename(hint))
-        t = LakeTable(
-            location, _meta_from_spec(json.loads(io.read_text(meta_file))),
-            io=io,
+        meta = location / "_meta"
+        hint = io.read_text(str(meta / "version-hint.text")).strip()
+        return LakeTable.from_metadata(
+            location, str(meta / _hint_to_filename(hint)), io
         )
-        t.loaded_from = meta_file
-        return t
 
     def refresh(self) -> "LakeTable":
         """Re-read committed metadata (reference: table.refresh(),
@@ -1305,8 +1310,7 @@ class LakeTable:
         base pointer a catalog-of-record publish compares against — so
         a refreshed handle can commit again after losing a CAS race."""
         fresh = LakeTable.load(self.location, io=self.io)
-        self.meta = fresh.meta
-        self.loaded_from = fresh.loaded_from
+        self.meta, self.loaded_from = fresh.meta, fresh.loaded_from
         return self
 
     @property
@@ -1372,10 +1376,15 @@ class LakeTable:
             )
         meta_dir = self.location / "_meta"
         hint_file = str(meta_dir / "version-hint.text")
-        version = (
-            _hint_to_version(self.io.read_text(hint_file).strip()) + 1
+        # past both the hint and the loaded document: after a published
+        # commit whose hint write failed, the hint lags the catalog
+        version = 1 + max(
+            _hint_to_version(self.io.read_text(hint_file).strip())
             if self.io.exists(hint_file)
-            else 1
+            else 0,
+            _hint_to_version(self.loaded_from.rsplit("/", 1)[-1])
+            if self.loaded_from
+            else 0,
         )
         if self.unique_metadata_names:
             # catalog-of-record mode: the metadata OBJECT key must be
@@ -1388,8 +1397,12 @@ class LakeTable:
         else:
             fname = f"v{version}.metadata.json"
         meta_path = str(meta_dir / fname)
+        # compact separators keep CPython on its C encoder (any
+        # ``indent`` falls back to the pure-Python one); readers parse
+        # either form, so older indented documents still load
         self.io.write_text(
-            meta_path, json.dumps(_meta_to_spec(self.meta), indent=1)
+            meta_path,
+            json.dumps(_meta_to_spec(self.meta), separators=(",", ":")),
         )
         if self.on_commit is not None:
             # catalog-of-record publish (e.g. Glue pointer CAS) — the
@@ -1402,9 +1415,25 @@ class LakeTable:
         # hint carries the filename in unique mode (readers resolve it
         # via _hint_to_filename); the bare number otherwise (stable
         # format for plain tables)
-        self.io.write_text(
-            hint_file, fname if self.unique_metadata_names else str(version)
-        )
+        hint = fname if self.unique_metadata_names else str(version)
+        try:
+            self.io.write_text(hint_file, hint)
+        except Exception as e:  # noqa: BLE001
+            if self.on_commit is None:
+                raise  # no catalog of record: the hint is the commit point
+            # the publish above landed the commit: the hint is only a
+            # cache for hint readers, so a failed write leaves it stale
+            # and neither raises nor reverts (Iceberg's
+            # HadoopTableOperations does the same); the next commit
+            # numbers past ``loaded_from``
+            import warnings  # noqa: PLC0415
+
+            warnings.warn(
+                f"{self.identifier}: committed {fname} but the "
+                f"version-hint write failed ({e!r}); the hint is stale",
+                RuntimeWarning,
+                stacklevel=2,
+            )
         self.loaded_from = meta_path
 
     @property
@@ -4586,6 +4615,18 @@ class LakeTable:
             return None  # mixed or unmarked: structured not-eligible
         if not all(
             _SPARK_BUCKET_FILE_RE.search(f["path"]) for f in snap.files
+        ):
+            return None
+        # the adopted table is rooted at the snapshot dir and scans
+        # every data file there, so adopt only when the manifest lists
+        # them all (Spark skips names starting with "_" or ".")
+        listed = {f["path"] for f in snap.files}
+        if any(
+            f"{snap.data_dir}/{rel}" not in listed
+            for rel in self.data_io.list_files(
+                str(self.location / snap.data_dir)
+            )
+            if not rel.rsplit("/", 1)[-1].startswith(("_", "."))
         ):
             return None
         fs = self.schema_at(snap.schema_version)

@@ -11,10 +11,12 @@ and compares the full metadata document before and after."""
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import pytest
 from pyspark.sql import types as T
 
+from sample_iceberg_schema_evolution_pyiceberg_spark.fileio import LocalFileIO
 from sample_iceberg_schema_evolution_pyiceberg_spark.partitioning import (
     compile_partition_spec,
 )
@@ -216,3 +218,38 @@ def test_op_writes_one_metadata_version(spark, tmp_path, name):
     before = versions()
     op(spark, t, arg)
     assert versions() == before + 1
+
+
+def test_published_commit_survives_failed_hint_write(spark, tmp_path):
+    """With a publish hook the hook is the commit point: a failed
+    version-hint write after it leaves a stale hint, not a reverted
+    handle, and the next commit numbers past the published version."""
+    published = []
+
+    class HintFailsOnce(LocalFileIO):
+        fail = True
+
+        def write_text(self, path, text):
+            if self.fail and path.endswith("version-hint.text"):
+                HintFailsOnce.fail = False
+                raise OSError("simulated hint write failure")
+            super().write_text(path, text)
+
+    t = LakeCatalog(str(tmp_path / "wh")).create_table("db", "t", SCHEMA)
+    t.append(_rows(spark, 0, 10))
+    t.io = HintFailsOnce()
+    t.on_commit = lambda version, path: published.append(path)
+    with pytest.warns(RuntimeWarning, match="version-hint"):
+        snap = t.append(_rows(spark, 10, 20))
+
+    assert published == [t.loaded_from]
+    doc = json.loads(t.io.read_text(published[0]))
+    doc.pop("last-updated-ms")
+    assert _doc(t) == doc
+    assert len(t.snapshots) == 2
+    assert t.remove_orphan_files() == []
+    assert (t.location / snap.data_dir).is_dir()
+    assert t.to_df(spark).count() == 20
+
+    t.create_tag("after")
+    assert Path(published[1]).name.startswith("v4-")

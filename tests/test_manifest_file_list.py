@@ -11,6 +11,7 @@ import json
 import shutil
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from sample_iceberg_schema_evolution_pyiceberg_spark.iceberg_export import (
@@ -177,6 +178,28 @@ def test_manifest_bounds_every_table_scan(spark, tmp_path):
     assert t.to_df(spark).count() == 40
     assert t.changelog_between(spark).count() == 40
     t.compact(spark)
+    assert t.to_df(spark).count() == 40
+
+
+def test_manifest_bounds_bucket_layout_scan(spark, tmp_path):
+    """A Spark-bucket-layout snapshot scans through a catalog table
+    rooted at its dir; a stray bucket file there makes the snapshot
+    read from its manifest instead, so the stray rows stay out."""
+    cat = LakeCatalog(tmp_path / "wh")
+    spec = compile_partition_spec(
+        {"partitions": [{"column_name": "k", "transform": "bucket[4]"}]}
+    )
+    t = cat.create_table(
+        "db", "stray_bucket", _src(spark, 0, 1).schema, partition_spec=spec,
+        properties={"write.bucket-layout": "spark"},
+    )
+    snap = t.append(_src(spark, 0, 40))
+    assert t._adopt_bucketed_scan(spark, snap) is not None
+    written = sorted((t.location / snap.data_dir).rglob("*.parquet"))
+    src = next(p for p in written if pq.read_metadata(p).num_rows)
+    shutil.copy(src, src.with_name("part-99999-stray" + src.name[10:]))
+    assert sum(r["record_count"] for r in t.files_df(spark).collect()) == 40
+    assert t._adopt_bucketed_scan(spark, snap) is None
     assert t.to_df(spark).count() == 40
 
 

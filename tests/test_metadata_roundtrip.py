@@ -14,8 +14,14 @@ translator that drops a populated field fails the equality."""
 from __future__ import annotations
 
 import dataclasses
+import json
+from pathlib import Path
+
+from pyspark.sql import types as T
 
 from sample_iceberg_schema_evolution_pyiceberg_spark.table_format import (
+    LakeCatalog,
+    LakeTable,
     Snapshot,
     _meta_from_spec,
     _meta_to_spec,
@@ -114,3 +120,21 @@ def test_meta_spec_roundtrip_preserves_every_populated_field():
     }
     got = _meta_from_spec(_meta_to_spec(dict(meta)))
     assert got == meta
+
+
+def test_indented_metadata_loads_and_commits_compact(tmp_path):
+    """A metadata file in the older indented format still loads and
+    commits; the commit writes a compact one-line document (the form
+    CPython's C encoder produces) that reloads to the committed meta."""
+    schema = T.StructType([T.StructField("k", T.LongType())])
+    t = LakeCatalog(str(tmp_path / "wh")).create_table("db", "t", schema)
+    old = Path(t.loaded_from)
+    old.write_text(json.dumps(json.loads(old.read_text()), indent=1))
+
+    t = LakeTable.load(t.location)
+    t.commit_schema(schema.add("v", T.StringType()))
+    reloaded = LakeTable.load(t.location)
+    assert reloaded.loaded_from == t.loaded_from != str(old)
+    assert reloaded.meta == t.meta
+    assert reloaded.schema.fieldNames() == ["k", "v"]
+    assert "\n" not in Path(t.loaded_from).read_text()
